@@ -1,6 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -632,25 +637,26 @@ object Dedup {
     * need both the labels AND the raw pairs (d44) pay for the MinHash
     * pipeline once. Returns (doc_id, cluster_rep) for every doc that
     * appears in at least one pair.
+    *
+    * The edge cache is laid out co-located AND co-sorted with the
+    * superstep join key (repartition(dst) + sortWithinPartitions before
+    * the persist): every superstep's sort-merge join then reads the cache
+    * with ZERO exchange and ZERO sort on the corpus-scale edge side — only
+    * the N-row label table is shuffled+sorted per iteration. The layout
+    * A/B and its sf10 numbers are recorded in OPTIMIZATION_r16.md; the
+    * measured superstep counts (dup-cluster graphs have diameter 1) in
+    * OPTIMIZATION_r17.md and VERDICT.md.
+    *
+    * Convergence is counted, not summed: each superstep is ONE eager
+    * checkpoint job whose `observe` metric counts the vertices whose label
+    * dropped, and the loop stops at the first superstep where none did.
+    * Superstep 1 needs no initial labels table — over the self-looped
+    * edges, "min over self and neighbour ids" is a plain min(dst) — and
+    * later supersteps carry the previous label through the aggregate as
+    * the self-loop row's neighbour label. A diameter-1 graph therefore
+    * costs two supersteps and an empty graph one.
     */
-  private[graft] def clusterLabels(pairs: DataFrame): DataFrame =
-    clusterLabels(pairs, sortedEdgeCache = true)
-
-  /** `sortedEdgeCache` lays the edge cache out co-located AND co-sorted
-    * with the superstep join key (repartition(dst) + sortWithinPartitions
-    * before the persist): every superstep's sort-merge join then reads
-    * the cache with ZERO exchange and ZERO sort on the corpus-scale edge
-    * side — only the N-row label table is shuffled+sorted per iteration.
-    * Parameterized (rather than unconditional) so the interleaved A/B
-    * harness (tools/CCShapeAB) adjudicates both layouts over the exact
-    * registered code path; the default is the measured winner — r16 sf10
-    * A/B (27.31M-pair graph, identical label sets asserted, best-of-3):
-    * sorted cache won every round, 12.0 -> 9.1 s wall, 288 -> 222 CPU-s,
-    * 1.35 -> 0.88 GB shuffle, 2.67 -> 1.34 GB spill. The r16 d49
-    * ProfileQuery that motivated it had attributed ~92 CPU-s/run to two
-    * 55M-row per-superstep edge exchanges plus 3.1 GB sort spills.
-    */
-  private[graft] def clusterLabels(pairs: DataFrame, sortedEdgeCache: Boolean): DataFrame = {
+  private[graft] def clusterLabels(pairs: DataFrame): DataFrame = {
     // Symmetrize via explode, not self-union: a union of two projections
     // scans (and for unpersisted callers like d21/d34, fully recomputes)
     // the pair pipeline once per branch; the explode emits both directions
@@ -661,10 +667,8 @@ object Dedup {
     // superstep at cluster scale) just to fold the prior label back in.
     val sym = Edges.symmetrize(pairs, col("doc_a"), col("doc_b")).persist()
     val ids = sym.select(col("src").as("id")).distinct()
-    val edgesRaw = sym.union(ids.select(col("id").as("src"), col("id").as("dst")))
-    val edges =
-      (if (sortedEdgeCache) edgesRaw.repartition(col("dst")).sortWithinPartitions("dst")
-       else edgesRaw).persist()
+    val edges = sym.union(ids.select(col("id").as("src"), col("id").as("dst")))
+      .repartition(col("dst")).sortWithinPartitions("dst").persist()
     // Checkpoint-block hygiene (the j11/pagerankLoop discipline, see
     // Joins.scala): Dataset.unpersist cannot reach an RDD-layer
     // localCheckpoint persist, so untracked supersteps leak one
@@ -683,44 +687,50 @@ object Dedup {
     // buffer RDDs would register inside it and the cleanup would
     // destroy the cache the loop amortizes (the j11 review lesson).
     val sc = pairs.sparkSession.sparkContext
-    edges.count() // materializes the sym AND edges persists
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val cp = df.localCheckpoint(true) // eager: materialized here
-      (cp, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    var (labels, liveCpIds) = checkpointTracked(ids.withColumn("label", col("id")))
-    // sym fed only the edges build (materialized at edges.count) and the
-    // initial labels checkpoint just taken — release it BEFORE the
-    // supersteps instead of after, so its corpus-scale block set is not
-    // resident storage competing with the iterations' execution memory.
+    // materializes the sym AND edges persists — a noop write rather than
+    // count(), which would add a global-aggregate exchange (one more job)
+    edges.write.format("noop").mode("overwrite").save()
+    // sym fed only the edges build — release it BEFORE the supersteps so
+    // its corpus-scale block set is not resident storage competing with
+    // the iterations' execution memory.
     sym.unpersist()
-    // Labels only DECREASE under min-propagation (each update takes a min
-    // that includes the vertex's own label via its self-loop), so
-    // fixpoint <=> the label sum stops changing — a 1-row aggregate over
-    // the checkpoint instead of a prev-vs-next filter job per superstep.
-    // DECIMAL(38,0) keeps the check overflow-safe at any vertex count.
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var done = false
+    // One superstep = one eager checkpoint of (id, label, moved). Labels
+    // only DECREASE under min-propagation, so fixpoint <=> no vertex
+    // moved; the count rides the checkpointing job itself as an observed
+    // metric instead of a second aggregate job over the checkpoint.
+    def superstep(agg: DataFrame): (DataFrame, Set[Int], Boolean) = {
+      val obs = Observation()
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val cp = agg
+        .select(col("id"), col("label"), (col("label") < col("prev")).as("moved"))
+        .observe(obs, count_if(col("moved")).as("n_moved"))
+        .localCheckpoint(true) // eager: materialized here
+      val mine = sc.getPersistentRDDs.keySet.toSet -- before
+      // Bounded wait (obs.get blocks forever if the metric is never
+      // delivered); without the metric, decide from the checkpoint itself
+      // — never declare a fixpoint without evidence.
+      val moved =
+        try Await.result(obs.future, 30.seconds).getLong(0) > 0
+        catch { case _: TimeoutException => !cp.where(col("moved")).isEmpty }
+      (cp, mine, moved)
+    }
+    var (labels, liveCpIds, moved) = superstep(edges
+      .groupBy(col("src").as("id"))
+      .agg(min(col("dst")).as("label"))
+      .withColumn("prev", col("id")))
+    var iter = 1
     val maxIters = 20
-    while (!done && iter < maxIters) {
-      val (next, mine) = checkpointTracked(edges
+    while (moved && iter < maxIters) {
+      val (next, mine, m) = superstep(edges
         .join(labels.select(col("id").as("dst"), col("label").as("nl")), "dst")
-        .groupBy(col("src").as("id")).agg(min(col("nl")).as("label")))
+        .groupBy(col("src").as("id"))
+        .agg(min(col("nl")).as("label"),
+             max(when(col("src") === col("dst"), col("nl"))).as("prev")))
       // the previous labels checkpoint fed only this materialization
       liveCpIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
       liveCpIds = mine
-      // driver-sized: grouping-less aggregate, exactly 1 row. sum over an
-      // EMPTY vertex set is NULL — normalize to 0 so an empty pair graph
-      // converges on the second pass instead of spinning to the iteration
-      // cap (EmptyInputSpec pins this).
-      val s = Option(next
-        .agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0).getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-      done = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
       labels = next
+      moved = m
       iter += 1
     }
     edges.unpersist()
@@ -733,7 +743,7 @@ object Dedup {
     }
     // Diameter > maxIters means the labels above are NOT fixed-point —
     // returning them silently would hand the caller wrong clusters.
-    if (!done) sys.error(
+    if (moved) sys.error(
       s"dupClusters: min-label propagation did not converge in $maxIters iterations " +
         "(a dup-cluster chain longer than the cap); raise the cap for this corpus")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_rep"))

@@ -675,7 +675,8 @@ object Events {
     // integers — cross-engine exact, same discipline as a10). At scale
     // this is one keyed sort + one type-keyed aggregation; the
     // percentile side swaps to the GK sketch (a18's pinned contract)
-    // when exact ordering stops being affordable.
+    // when exact ordering stops being affordable. Both percentages come
+    // off one array-valued percentile buffer (a10's shape).
     "e13_dwell_percentiles" -> Q(
       fn = (s, d) => {
         // two-level lag (see twoLevelLag): a hot user's gaps distribute
@@ -689,9 +690,10 @@ object Events {
           .where(col("gap_us").isNotNull)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_gaps"),
-               expr("percentile(gap_us, 0.5)").as("p50_us"),
-               expr("percentile(gap_us, 0.9)").as("p90_us"),
+               expr("percentile(gap_us, array(0.5, 0.9))").as("p_us"),
                max("gap_us").as("max_us"))
+          .select(col("event_type"), col("n_gaps"),
+                  col("p_us")(0).as("p50_us"), col("p_us")(1).as("p90_us"), col("max_us"))
           .orderBy("event_type")
       },
       oracle = Some("""

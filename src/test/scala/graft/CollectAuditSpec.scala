@@ -12,10 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Convention enforced here: every `.collect()` in the engine layers
   * must state its bound in a `driver-sized:` comment on the same line or
   * within the 6 lines above. The existing sites are all control-sized
-  * (k-means centroids, per-dimension stats, a 1-row convergence sum, the
-  * 1024-word Bloom bitset, per-token-range checkpoint/count tables); a
-  * new collect without a declared bound fails the build and forces the
-  * author to justify it.
+  * (k-means centroids, per-dimension stats, the 1024-word Bloom bitset,
+  * per-token-range checkpoint/count tables); a new collect without a
+  * declared bound fails the build and forces the author to justify it.
   */
 class CollectAuditSpec extends AnyFunSuite {
 

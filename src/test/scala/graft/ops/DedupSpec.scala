@@ -1,7 +1,15 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
 
@@ -397,26 +405,78 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("clusterLabels: sorted edge-cache layout returns identical labels (r16 layout A/B)") {
-    // The r16 layout change (repartition(dst) + sortWithinPartitions
-    // before the edge persist) must be a pure plan-shape change: both
-    // layouts produce the same fixed-point label set on a pair graph
-    // that exercises multi-hop chains (a~b, b~c without a~c).
+    // The sorted edge cache (repartition(dst) + sortWithinPartitions
+    // before the persist; A/B verdict in OPTIMIZATION_r16.md) must yield
+    // the true connected components on a pair graph that exercises
+    // multi-hop chains (a~b, b~c without a~c).
     val pairs = spark.createDataFrame(Seq(
       (1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (12L, 13L),
       (20L, 21L), (5L, 21L))).toDF("doc_a", "doc_b")
-    def labelSet(sorted: Boolean): Set[(Long, Long)] = {
-      val out = Dedup.clusterLabels(pairs, sortedEdgeCache = sorted)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      PipelineCache.release()
-      out
-    }
-    val legacy = labelSet(sorted = false)
-    val adopted = labelSet(sorted = true)
-    assert(adopted == legacy, s"layouts diverged: $adopted vs $legacy")
-    // and the labels are the true connected components
-    assert(adopted == Set(1L -> 1L, 2L -> 1L, 3L -> 1L,
+    val (labels, _) = labelsAndSupersteps(pairs)
+    assert(labels == Set(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L,
       20L -> 5L, 21L -> 5L, 5L -> 5L))
+  }
+
+  /** The labels clusterLabels returns on `pairs`, and how many supersteps
+    * (eager label checkpoints) it ran to get them. Checkpoint actions are
+    * counted by a QueryExecutionListener; listener delivery is async, so
+    * a sentinel observed action — delivered on the same bus, after every
+    * earlier event — marks the point where the count is complete.
+    */
+  private def labelsAndSupersteps(pairs: DataFrame): (Set[(Long, Long)], Int) = {
+    val checkpoints = new AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") { checkpoints.incrementAndGet(); () }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val labels = Dedup.clusterLabels(pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val sentinel = Observation()
+      spark.range(1).observe(sentinel, count(lit(1)).as("n")).collect()
+      Await.result(sentinel.future, 60.seconds)
+      (labels, checkpoints.get)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      PipelineCache.release()
+    }
+  }
+
+  test("clusterLabels: a diameter-1 pair graph runs at most two supersteps") {
+    // cliques and lone pairs: superstep 1 (min over self and neighbour
+    // ids) is already the fixpoint, superstep 2 observes that no label
+    // moved. A third checkpoint means bookkeeping jobs crept back.
+    val pairs = spark.createDataFrame(Seq(
+      (1L, 2L), (7L, 8L), (7L, 9L), (8L, 9L), (30L, 4L)))
+      .toDF("doc_a", "doc_b")
+    val (labels, steps) = labelsAndSupersteps(pairs)
+    assert(labels == Set(1L -> 1L, 2L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 7L,
+      4L -> 4L, 30L -> 4L))
+    assert(steps <= 2, s"ran $steps supersteps on a diameter-1 graph")
+  }
+
+  test("clusterLabels: an empty pair graph converges in one superstep") {
+    val pairs = spark.createDataFrame(Seq.empty[(Long, Long)]).toDF("doc_a", "doc_b")
+    val (labels, steps) = labelsAndSupersteps(pairs)
+    assert(labels.isEmpty)
+    assert(steps == 1, s"ran $steps supersteps on an empty graph")
+  }
+
+  test("clusterLabels: a chain longer than the iteration cap fails instead of returning non-fixpoint labels") {
+    // min-label propagation moves one hop per superstep: a path over ids
+    // 1..n needs n-1 moving supersteps plus one that observes the
+    // fixpoint. n = 20 fits the 20-superstep cap exactly; n = 22 does
+    // not, and must raise rather than hand back labels that still move.
+    def path(n: Int) =
+      spark.createDataFrame((1L until n.toLong).map(i => (i, i + 1))).toDF("doc_a", "doc_b")
+    val (labels, steps) = labelsAndSupersteps(path(20))
+    assert(labels == (1L to 20L).map(_ -> 1L).toSet)
+    assert(steps == 20, s"ran $steps supersteps on a 20-vertex path")
+    val e = intercept[RuntimeException](labelsAndSupersteps(path(22)))
+    assert(e.getMessage.contains("did not converge"), e.getMessage)
   }
 
   test("degenerate docs never reach a verify join with empty hpos") {
