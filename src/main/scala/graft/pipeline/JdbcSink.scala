@@ -17,8 +17,10 @@ import org.apache.spark.sql.types.DataType
   *      are no-ops on the key columns)
   *   3. WAL row update -> 'COMMITTED'
   *   4. commit; on transient failure (deadlock 1213 / lock-wait 1205):
-  *      rollback + exponential backoff, up to 5 attempts — T4; anything
-  *      else propagates so the Spark task retries — T5's escalation.
+  *      rollback + exponential backoff, up to `maxRetries` attempts,
+  *      sleeping `retryBaseDelayMs * 2^n` before attempt n + 2 — T4;
+  *      anything else propagates so the Spark task retries — T5's
+  *      escalation.
   *
   * Batch ids are deterministic — (partitionId << 20) | batchIndex — unlike
   * the reference's collision-prone time-derived ids (SURVEY §7.4).
@@ -47,13 +49,6 @@ object JdbcSink {
       // Test seam: invoked inside the batch transaction, before commit;
       // lets specs inject transient/fatal failures into the real path.
       onBatch: (Long, Long) => Unit = (_, _) => ())
-
-  /** Production (MySQL) SQL text — kept for unit tests and docs. */
-  def insertIgnoreSql(cfg: JdbcConfig): String =
-    MySqlDialect.insertIgnoreSql(cfg.table, cfg.columns, cfg.keyCols, Map.empty)
-
-  def walStartSql(wal: String): String = MySqlDialect.walStartSql(wal)
-  def walCommitSql(wal: String): String = MySqlDialect.walCommitSql(wal)
 
   def deterministicBatchId(partitionId: Int, batchIndex: Int): Long =
     (partitionId.toLong << 20) | batchIndex.toLong

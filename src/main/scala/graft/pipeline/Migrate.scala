@@ -115,35 +115,6 @@ final case class JdbcTableSink(cfg: JdbcSink.JdbcConfig) extends MigrateSink {
   }
 }
 
-/** JDBC binding through the DataSource V2 WRITE path
-  * (graft.sources.JdbcSinkSource): same idempotent txn/WAL discipline as
-  * JdbcTableSink, but rows flow through Spark's native commit protocol
-  * (DataWriter per task, commit-message count roll-up) instead of
-  * foreachPartition. Drop-in via the same MigrateSink seam; verification
-  * queries are shared with the classic binding.
-  */
-final case class JdbcV2TableSink(cfg: JdbcSink.JdbcConfig) extends MigrateSink {
-  private val delegate = JdbcTableSink(cfg)
-
-  def write(df: DataFrame, rangeIds: Seq[Long]): Unit =
-    df.select(cfg.columns.map(col): _*)
-      .write.format("graft.sources.JdbcSinkSource")
-      .option("url", cfg.url)
-      .option("user", Option(cfg.user).getOrElse(""))
-      .option("password", Option(cfg.password).getOrElse(""))
-      .option("table", cfg.table)
-      .option("keyCols", cfg.keyCols.mkString(","))
-      .option("dialect", cfg.dialect.name)
-      .option("batchSize", cfg.batchSize.toString)
-      .option("walTable", cfg.walTable.getOrElse(""))
-      .mode("append").save()
-
-  def countsByRange(spark: SparkSession, rangeIds: Seq[Long]): Map[Long, Long] =
-    delegate.countsByRange(spark, rangeIds)
-
-  def totalCount(spark: SparkSession): Long = delegate.totalCount(spark)
-}
-
 /** The end-to-end migration pipeline — the reference's main() re-expressed
   * Spark-first (SURVEY.md §3.1):
   *
@@ -159,8 +130,9 @@ final case class JdbcV2TableSink(cfg: JdbcSink.JdbcConfig) extends MigrateSink {
   *  - per-range verification counts come from the WRITE JOB ITSELF via
   *    observe() — no second source scan (the reference re-counts the
   *    source per range: 2x read amplification at 100 TB);
-  *  - batch ids are deterministic (range_id), not time-derived — fixing the
-  *    reference's collision-prone time.time()*1000+i (SURVEY §7.4).
+  *  - batch ids are deterministic ((partitionId << 20) | batchIndex), not
+  *    time-derived — fixing the reference's collision-prone
+  *    time.time()*1000+i (SURVEY §7.4).
   *
   * Source, sink, and checkpoint store are pluggable traits; parquet
   * bindings serve fixtures, JDBC bindings (JdbcTableSink/JdbcCheckpoints)

@@ -16,9 +16,9 @@ import scala.util.control.NonFatal
 object Retry {
 
   def withBackoff[T](
-      maxAttempts: Int = 5,
-      baseDelayMs: Long = 500,
-      isTransient: Throwable => Boolean = _ => true,
+      maxAttempts: Int,
+      baseDelayMs: Long,
+      isTransient: Throwable => Boolean,
       sleep: Long => Unit = Thread.sleep)(f: => T): T = {
     var attempt = 0
     while (true) {
@@ -43,7 +43,4 @@ object Retry {
       msg.contains("Deadlock") || msg.contains("deadlock") ||
       msg.contains("Lock wait timeout")
   }
-
-  /** Back-compat alias (round-1 name). */
-  def isMySqlTransient(e: Throwable): Boolean = isSqlTransient(e)
 }

@@ -27,8 +27,6 @@ trait WalDao extends AutoCloseable {
   * objects, so they serialize into the foreachPartition closure.
   */
 trait SqlDialect extends Serializable {
-  def name: String
-
   def quote(id: String): String
 
   /** SQL type used for DDL and (where needed) parameter casts. */
@@ -135,7 +133,6 @@ trait SqlDialect extends Serializable {
   * unmediated; the recorded SQL is asserted character-for-character.
   */
 object MySqlDialect extends SqlDialect {
-  val name = "mysql"
   def quote(id: String): String = s"`$id`"
 
   override def sqlType(dt: DataType): String = dt match {
@@ -182,7 +179,6 @@ object MySqlDialect extends SqlDialect {
   * a Derby SELECT list must be CAST to a concrete type.
   */
 object DerbyDialect extends SqlDialect {
-  val name = "derby"
   def quote(id: String): String = "\"" + id + "\""
 
   def insertIgnoreSql(

@@ -162,8 +162,10 @@ object EventStreams {
     * after a failure (Structured Streaming's at-least-once contract per
     * epoch) is absorbed by the key-idempotent insert — the same
     * effectively-once story as the batch pipeline, now continuous.
-    * The WAL's (range_id, batch_id) rows additionally carry the
-    * streaming epoch via the deterministic per-partition batch ids.
+    * The WAL's (range_id, batch_id) rows do not carry the streaming
+    * epoch: batch ids are (partitionId << 20) | batchIndex within one
+    * micro-batch, so a later epoch with the same partition, batch index
+    * and first-row range_id upserts the same WAL row.
     */
   def streamToJdbc(
       df: DataFrame,

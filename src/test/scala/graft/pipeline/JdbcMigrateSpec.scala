@@ -101,22 +101,6 @@ class JdbcMigrateSpec extends AnyFunSuite {
     assert(m2.validate().status == "OK")
   }
 
-  test("full migrate through the DataSource V2 write binding (JdbcV2TableSink)") {
-    val (url, cfg) = freshBinding()
-    val v2sink = cfg.sink.get match {
-      case JdbcTableSink(jcfg) => JdbcV2TableSink(jcfg)
-      case other => fail(s"unexpected sink $other")
-    }
-    val m = new Migrate(spark, cfg.copy(sink = Some(v2sink)))
-    m.run()
-    assert(!m.checkpointsIncomplete())
-    val v = m.validate()
-    assert(v.status == "OK" && v.diff == 0 && v.src_count == 1500)
-    assert(queryLong(url, "SELECT COUNT(*) FROM \"orders_sink\"") == 1500L)
-    assert(queryLong(url,
-      "SELECT COUNT(*) FROM \"migration_wal\" WHERE \"status\" <> 'COMMITTED'") == 0L)
-  }
-
   test("partial checkpoint seed (crash mid-batch) is repaired, not skipped") {
     val (url, cfg) = freshBinding()
     // simulate a seeding crash: only 2 of 4 ranges made it into the table

@@ -9,7 +9,7 @@ class RetrySpec extends AnyFunSuite {
   test("retries transient failures with exponential backoff then succeeds") {
     var calls = 0
     val sleeps = scala.collection.mutable.ListBuffer[Long]()
-    val out = Retry.withBackoff(5, 500, Retry.isMySqlTransient, sleeps += _) {
+    val out = Retry.withBackoff(5, 500, Retry.isSqlTransient, sleeps += _) {
       calls += 1
       if (calls < 4) throw new Transient else "ok"
     }
@@ -20,7 +20,7 @@ class RetrySpec extends AnyFunSuite {
   test("gives up after maxAttempts") {
     var calls = 0
     intercept[Transient] {
-      Retry.withBackoff(3, 1, Retry.isMySqlTransient, _ => ()) {
+      Retry.withBackoff(3, 1, Retry.isSqlTransient, _ => ()) {
         calls += 1; throw new Transient
       }
     }
@@ -30,7 +30,7 @@ class RetrySpec extends AnyFunSuite {
   test("non-transient errors propagate immediately (Spark task retry takes over)") {
     var calls = 0
     intercept[IllegalArgumentException] {
-      Retry.withBackoff(5, 1, Retry.isMySqlTransient, _ => ()) {
+      Retry.withBackoff(5, 1, Retry.isSqlTransient, _ => ()) {
         calls += 1; throw new IllegalArgumentException("schema mismatch")
       }
     }
