@@ -370,7 +370,8 @@ object Dedup {
     // (that conf also converted OTHER joins and shuffled +4.3 GB); here
     // the exchanges are identical by construction, so the delta is pure
     // sort CPU + spill: 7.2 -> 5.0 s wall, 208 -> 137 CPU-s, 13 -> 0 GB
-    // spill at sf10 (VerifyAttachAB, identical verified-pair checksums).
+    // spill at sf10 (identical verified-pair checksums; verdict in
+    // OPTIMIZATION_r17.md, change 2).
     def side(id: String, sfx: String) = hs.select(
       col("doc_id").as(id) +: col("hpos").as("h" + sfx) +:
         carry.map(c => col(c).as(c + sfx)): _*).hint("shuffle_hash")
@@ -391,9 +392,10 @@ object Dedup {
     val pairs = portableCandidatePairs(base)
     // jaccard_sorted (custom codegen expression): one allocation-free
     // merge walk per pair over shingle sets sorted once per DOCUMENT
-    // side — r15 interleaved A/B at sf10 (VerifyJaccardAB, identical
-    // 27.31M pairs + checksum): 761 -> 301 CPU-s / 26.3 -> 10.9 s best
-    // wall for the whole candidates+verify pipeline, GC 17 -> 2.5 s.
+    // side — r15 interleaved A/B at sf10 (identical 27.31M pairs +
+    // checksum; verdict in the message of commit 2f07259): 761 -> 301
+    // CPU-s / 26.3 -> 10.9 s best wall for the whole candidates+verify
+    // pipeline, GC 17 -> 2.5 s.
     // History of this expression site: the r14 pass rejected the
     // |A|+|B|-|A n B| identity over intersect/union because the twice-
     // referenced intersect re-evaluates once inlined (1,543 -> 3,673
@@ -755,20 +757,17 @@ object Dedup {
     * DedupSpec can pin the gap==k / within-doc-repeat / overlap edges on
     * a crafted corpus against a brute-force reference — fixture text is
     * not guaranteed to exercise the exact-gap boundary.
+    *
+    * Windows are emitted by the one-pass `word_window_hashes` codegen
+    * expression (guide §4: no per-window slice/string/md5, and the
+    * shuffle + window sort key narrows from a 32-byte hex string to a
+    * long). It replaced the pre-r16 split + transform lambda + slice +
+    * concat_ws + md5 emit (verdict in OPTIMIZATION_r16.md, change 2).
+    * Window GROUPING is unchanged: the hashed bytes are exactly the
+    * joined window string's bytes (see WordWindowHashes; parity pinned
+    * in DedupSpec on crafted multi-space corpora).
     */
-  private[graft] def substringDedup(docs: DataFrame, k: Int): DataFrame =
-    substringDedup(docs, k, hofWindows = false)
-
-  /** `hofWindows = true` keeps the pre-r16 window emit (split + transform
-    * lambda + slice + concat_ws + md5 hex keys) for the interleaved A/B;
-    * the default is the one-pass `word_window_hashes` codegen expression
-    * (guide §4: no per-window slice/string/md5, and the shuffle + window
-    * sort key narrows from a 32-byte hex string to a long). Window
-    * GROUPING is unchanged: the hashed bytes are exactly the joined
-    * window string's bytes (see WordWindowHashes; parity pinned in
-    * DedupSpec on crafted multi-space corpora).
-    */
-  private[graft] def substringDedup(docs: DataFrame, k: Int, hofWindows: Boolean): DataFrame = {
+  private[graft] def substringDedup(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.GraftExtensions.register(docs.sparkSession)
     // n_words is computed BELOW the explode on purpose: written in the
@@ -779,30 +778,18 @@ object Dedup {
     // quadratic per document; a single 5M-char document ground one core
     // for 20+ minutes, found by the monster-doc probe). With n_words
     // materialized first, the Generate carries only (doc_id, n_words).
-    val wins = if (hofWindows)
-      docs
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .where(size(col("ws")) >= k)
-        .select(col("doc_id"), size(col("ws")).cast("long").as("n_words"), col("ws"))
-        .select(col("doc_id"), col("n_words"),
-                posexplode(expr(
-                  s"transform(sequence(0, size(ws)-$k), i -> concat_ws(' ', slice(ws, i+1, $k)))"))
-                  .as(Seq("pos", "win")))
-        .select(col("doc_id"), col("n_words"), col("pos").cast("long").as("pos"),
-                md5(col("win").cast("binary")).as("wh"))
-    else
-      // n_words = spaces + 1 = size(split(text,' ')) without building the
-      // token array (java split keeps trailing empty tokens at limit -1,
-      // so the space count is exact)
-      docs
-        .select(col("doc_id"), col("text"),
-                (length(col("text")) - length(replace(col("text"), lit(" "), lit(""))) + 1)
-                  .cast("long").as("n_words"))
-        .where(col("n_words") >= k)
-        .select(col("doc_id"), col("n_words"),
-                posexplode(call_function("word_window_hashes", col("text"), lit(k)))
-                  .as(Seq("pos", "wh")))
-        .select(col("doc_id"), col("n_words"), col("pos").cast("long").as("pos"), col("wh"))
+    // n_words = spaces + 1 = size(split(text,' ')) without building the
+    // token array (java split keeps trailing empty tokens at limit -1,
+    // so the space count is exact)
+    val wins = docs
+      .select(col("doc_id"), col("text"),
+              (length(col("text")) - length(replace(col("text"), lit(" "), lit(""))) + 1)
+                .cast("long").as("n_words"))
+      .where(col("n_words") >= k)
+      .select(col("doc_id"), col("n_words"),
+              posexplode(call_function("word_window_hashes", col("text"), lit(k)))
+                .as(Seq("pos", "wh")))
+      .select(col("doc_id"), col("n_words"), col("pos").cast("long").as("pos"), col("wh"))
     val ww = Window.partitionBy("wh")
     val dupOcc = wins
       .withColumn("dr", dense_rank().over(ww.orderBy("doc_id")))
@@ -1724,9 +1711,9 @@ object Dedup {
         //     returning -1 above the threshold — semantics unchanged
         //     (lev<=6 <=> banded in [0,6]; lev<=15 <=> banded >= 0).
         //     This alone measured 179.7 -> 120.5 s full-query wall /
-        //     5091 -> 3508 CPU-s at sf10 (ProfileD39, back-to-back runs;
-        //     an underestimate — the second run's box was slower on the
-        //     unchanged phases).
+        //     5091 -> 3508 CPU-s at sf10 (back-to-back runs, PLANS.md
+        //     round 14, ask 5; an underestimate — the second run's box
+        //     was slower on the unchanged phases).
         // (b) the points ride a Fellegi-Sunter-style weight TABLE
         //     (element_at over a constant array) instead of a when-chain:
         //     the optimizer inlines the lev alias into the pushed

@@ -54,8 +54,63 @@ object Joins {
               (lit(base) + expr(s"($damp * in_sum) div $unit")).as("rank"))
   }
 
-  /** The checkpointed fixed-point loop shared by j11 and the 100x A/B
-    * probe: `iters` supersteps with lineage truncation between them,
+  /** The FULL PageRank query body from a (c, sp) trade pair list to the
+    * ranked top-20 frame — cache discipline, fixed-point loop, output
+    * projection. An A/B of this body must call it, not copy it: the
+    * r11 bucketed-layout probe once copied a stale loop and biased the
+    * A/B it existed to adjudicate (PLANS.md, round 11, "j11 closed").
+    *
+    * Shape rationale (audited by PlanQualitySpec/ExchangeBudgetSpec):
+    *  - edges explode from ONE pass over trades (Edges.symmetrize) —
+    *    the union-of-two-projections form materialized the upstream
+    *    join once per branch before the persist caught it.
+    *  - ONE corpus-scale cache: the symmetrized edge list is hash-
+    *    partitioned by src BEFORE the persist, so deg aggregates off
+    *    the cache with ZERO exchange and every superstep join reads
+    *    co-located edges. The r14-era shape held TWO 117M-row caches
+    *    (raw edges + a degree-annotated copy, 2.65 GB resident at
+    *    sf10) and paid a 36M-row degree partial shuffle plus a second
+    *    cache build (264 CPU-s) — the r15 ProfileQuery pass measured
+    *    the whole second cache as costing ~70% of what the three
+    *    supersteps it served cost. Degree now rides the rank table
+    *    per superstep (see pagerankSuperstep).
+    *  - the edge cache is also sorted by src within partitions before
+    *    the persist, so each superstep's sort-merge join reads the
+    *    corpus-scale edge side with zero exchange AND zero sort (the
+    *    same layout as Dedup.clusterLabels). r16 sf10 interleaved A/B,
+    *    identical top-20 rows asserted, best-of-3 — sorted cache won
+    *    every round, 31.7 -> 26.9 s wall, 868 -> 727 CPU-s, 41.9 ->
+    *    27.8 GB spill; shuffle unchanged at 3.27 GB since the superstep
+    *    exchange was already removed by the r15 repartition (verdict in
+    *    OPTIMIZATION_r16.md, change 1).
+    *  - pagerankLoop truncates lineage between supersteps: constant
+    *    plan depth, separate jobs, and the checkpoint's hash(node)
+    *    partitioning lines up with the cached edge partitioning, so
+    *    the superstep join needs no rank-side exchange. The truncation
+    *    hides iterations 1-2 from plan walkers; the pins cover the
+    *    final superstep plus the un-truncated shared body directly.
+    */
+  def pagerankRanked(s: org.apache.spark.sql.SparkSession,
+                     trades: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val unit = 1000000L
+    val edges = Edges.symmetrize(trades, col("c"), col("sp"))
+      .repartition(col("src"))
+      .sortWithinPartitions("src")
+      .persist()
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("d")).persist()
+    PipelineCache.retain(edges, deg)
+    val rank0 = deg.select(col("src").as("node"), lit(unit).as("rank"))
+    pagerankLoop(s, edges, deg, rank0, 3)
+      .withColumn("kind", when(col("node") % 2 === 1, "supplier").otherwise("customer"))
+      .withColumn("key", expr("node div 2"))
+      .orderBy(col("rank").desc, col("node"))
+      .select("kind", "key", "rank")
+      .limit(20)
+  }
+
+  /** The checkpointed fixed-point loop behind j11 (its 100x bucketed-
+    * edge A/B read a wash; verdict in PLANS.md, round 11, "j11
+    * closed"): `iters` supersteps with lineage truncation between them,
     * eager cleanup of the previous iteration's checkpoint blocks, and
     * registry-managed release of the last one (it backs the returned
     * lazy plan, so it must outlive construction; every runner's
@@ -78,67 +133,6 @@ object Joins {
     * could silently violate. PlanQualitySpec pins the behavior
     * end-to-end: after j11 executes, the shared caches are still live.
     */
-  /** The FULL PageRank query body from a (c, sp) trade pair list to the
-    * ranked top-20 frame — cache discipline, fixed-point loop, output
-    * projection — shared verbatim by j11 and the layout A/B probe so
-    * the measured variant can never silently diverge from the
-    * registered query again (the probe once copied a stale loop and
-    * biased the A/B it existed to adjudicate).
-    *
-    * Shape rationale (audited by PlanQualitySpec/ExchangeBudgetSpec):
-    *  - edges explode from ONE pass over trades (Edges.symmetrize) —
-    *    the union-of-two-projections form materialized the upstream
-    *    join once per branch before the persist caught it.
-    *  - ONE corpus-scale cache: the symmetrized edge list is hash-
-    *    partitioned by src BEFORE the persist, so deg aggregates off
-    *    the cache with ZERO exchange and every superstep join reads
-    *    co-located edges. The r14-era shape held TWO 117M-row caches
-    *    (raw edges + a degree-annotated copy, 2.65 GB resident at
-    *    sf10) and paid a 36M-row degree partial shuffle plus a second
-    *    cache build (264 CPU-s) — the r15 ProfileQuery pass measured
-    *    the whole second cache as costing ~70% of what the three
-    *    supersteps it served cost. Degree now rides the rank table
-    *    per superstep (see pagerankSuperstep).
-    *  - pagerankLoop truncates lineage between supersteps: constant
-    *    plan depth, separate jobs, and the checkpoint's hash(node)
-    *    partitioning lines up with the cached edge partitioning, so
-    *    the superstep join needs no rank-side exchange. The truncation
-    *    hides iterations 1-2 from plan walkers; the pins cover the
-    *    final superstep plus the un-truncated shared body directly.
-    */
-  def pagerankRanked(s: org.apache.spark.sql.SparkSession,
-                     trades: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    pagerankRanked(s, trades, sortedEdgeCache = true)
-
-  /** `sortedEdgeCache` additionally sorts the src-partitioned edge cache
-    * by src before the persist, so each superstep's sort-merge join reads
-    * the corpus-scale edge side with zero exchange AND zero sort (the
-    * same experiment as Dedup.clusterLabels — adjudicated by
-    * tools/J11SortAB; the public overload's default is the winner:
-    * r16 sf10 interleaved A/B, identical top-20 rows asserted, best-of-3 —
-    * sorted cache won every round, 31.7 -> 26.9 s wall, 868 -> 727 CPU-s,
-    * 41.9 -> 27.8 GB spill; shuffle unchanged at 3.27 GB since the
-    * superstep exchange was already removed by the r15 repartition).
-    */
-  private[graft] def pagerankRanked(s: org.apache.spark.sql.SparkSession,
-                     trades: org.apache.spark.sql.DataFrame,
-                     sortedEdgeCache: Boolean): org.apache.spark.sql.DataFrame = {
-    val unit = 1000000L
-    val edgesPart = Edges.symmetrize(trades, col("c"), col("sp"))
-      .repartition(col("src"))
-    val edges =
-      (if (sortedEdgeCache) edgesPart.sortWithinPartitions("src") else edgesPart).persist()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d")).persist()
-    PipelineCache.retain(edges, deg)
-    val rank0 = deg.select(col("src").as("node"), lit(unit).as("rank"))
-    pagerankLoop(s, edges, deg, rank0, 3)
-      .withColumn("kind", when(col("node") % 2 === 1, "supplier").otherwise("customer"))
-      .withColumn("key", expr("node div 2"))
-      .orderBy(col("rank").desc, col("node"))
-      .select("kind", "key", "rank")
-      .limit(20)
-  }
-
   def pagerankLoop(s: org.apache.spark.sql.SparkSession,
                    edges: org.apache.spark.sql.DataFrame,
                    deg: org.apache.spark.sql.DataFrame,

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints the formatted physical plan (and optionally times)
   * for named queries — the `.explain("formatted")` loop the build plan
-  * calls for after each operator goes green.
+  * calls for after each operator goes green. `--time` runs the printed
+  * plan in full (`queryExecution.toRdd.count()`); `Dataset.count()`
+  * would time a count-pruned plan instead.
   *
   * usage: runMain graft.tools.Explain <sfDir> <query1> [query2 ...] [--time]
   */
@@ -30,7 +32,7 @@ object Explain {
       df.explain("formatted")
       if (time) {
         val t0 = System.nanoTime()
-        val n = df.count()
+        val n = df.queryExecution.toRdd.count()
         println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
     }

@@ -8,12 +8,16 @@ import org.apache.spark.sql.SparkSession
 /** Per-STAGE profiler for any registered query: runs the query verbatim
   * and prints one line per completed stage — executor run time, GC,
   * shuffle read/write bytes and records, input records, task count, and
-  * the stage's callsite name. Unlike the Profile{D39,D34,A26,J11}
-  * pipeline replays (which re-derive each phase and so can diverge from
-  * the registered plan under AQE), this attributes cost inside the EXACT
-  * plan the benchmark runs — use it when the replay and the full query
-  * disagree (the r15 a26 profile: the replayed baskets phase alone cost
-  * 1,080 CPU-s while the whole registered query cost 1,146).
+  * the stage's callsite name. It attributes cost inside the EXACT plan
+  * the benchmark runs, never a phase-by-phase replay (a replay re-derives
+  * each phase and can diverge from the registered plan under AQE: in the
+  * r15 a26 profile the replayed baskets phase alone cost 1,080 CPU-s
+  * while the whole registered query cost 1,146).
+  *
+  * Each rep runs the full physical plan (`queryExecution.toRdd.count()`,
+  * the boundary perfbench's digest fold measures), not `Dataset.count()`:
+  * Catalyst prunes a count down to a count-only plan, which for a18-class
+  * queries skips the very aggregates the full output pays for.
   *
   *   sbt "runMain graft.tools.ProfileQuery a26_market_basket /tmp/sf10 [reps]"
   */
@@ -41,6 +45,22 @@ object ProfileQuery {
     }
   }
 
+  /** Drain the async listener bus so stage-completed events land in the
+    * rep that ran them, not the next one. `listenerBus` is
+    * private[spark], so reach it reflectively; if the internals move in
+    * a future Spark, fall back to a fixed sleep.
+    */
+  private def drainListenerBus(spark: SparkSession): Unit =
+    try {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
+      val m = bus.getClass.getMethods
+        .filter(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
+        .minBy(_.getParameterCount)
+      if (m.getParameterCount == 0) m.invoke(bus)
+      else m.invoke(bus, java.lang.Long.valueOf(30000L))
+    } catch { case _: Throwable => Thread.sleep(500) }
+
   def main(args: Array[String]): Unit = {
     val qname = args.headOption.getOrElse(
       sys.error("usage: ProfileQuery <query-name> [sfDir] [reps]"))
@@ -62,10 +82,10 @@ object ProfileQuery {
     for (rep <- 1 to reps) {
       log.rows.synchronized(log.rows.clear())
       val t0 = System.nanoTime()
-      val n = q(spark, sfDir).count()
+      val n = q(spark, sfDir).queryExecution.toRdd.count()
       val wall = (System.nanoTime() - t0) / 1e9
       graft.ops.PipelineCache.release()
-      ProfileD39.drainListenerBus(spark)
+      drainListenerBus(spark)
       val rows = log.rows.synchronized(log.rows.toVector).sortBy(-_.runMs)
       println(f"== $qname rep $rep: wall=$wall%.1fs rows=$n " +
         f"cpuTotal=${rows.map(_.runMs).sum / 1000.0}%.1fs " +

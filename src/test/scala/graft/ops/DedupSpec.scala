@@ -202,39 +202,56 @@ class DedupSpec extends AnyFunSuite {
       // k words, nothing shared: no dup windows, absent from output
       9L -> "f91 f92 f93 f94"
     )
+    // multi-space + repeated-window corpus (k = 3): the duplicated 3-word
+    // window spans docs, and a double space makes an empty token that
+    // must group as its own word, exactly as split-on-single-space does
+    val spaced: Seq[(Long, String)] = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "a quick brown fox leaps high above the lazy dog",
+      3L -> "the  quick brown fox jumps over the  lazy dog",
+      4L -> "completely different words here nothing shared at all today"
+    )
 
     // brute force: enumerate every k-window, count holders by content,
     // merge dup positions into islands with the gap > k rule
-    val words = corpus.map { case (id, t) => id -> t.split(" ").toSeq }.toMap
-    val winsOf = words.collect { case (id, ws) if ws.size >= k =>
-      id -> (0 to ws.size - k).map(i => i.toLong -> ws.slice(i, i + k).mkString(" "))
-    }
-    val holders = winsOf.toSeq
-      .flatMap { case (id, ps) => ps.map { case (_, w) => (w, id) } }
-      .groupBy(_._1).map { case (w, xs) => w -> xs.map(_._2).distinct.size }
-    val expected = winsOf.flatMap { case (id, ps) =>
-      val dupPos = ps.collect { case (p, w) if holders(w) > 1 => p }.sorted
-      if (dupPos.isEmpty) None else {
-        val islands = dupPos.tail.foldLeft(Vector(Vector(dupPos.head))) {
-          case (acc, p) =>
-            if (p - acc.last.last > k) acc :+ Vector(p) else acc.init :+ (acc.last :+ p)
-        }
-        val nWords = words(id).size.toLong
-        val dupWords = islands.map(i => i.max - i.min + k).sum
-        Some((id, nWords, dupPos.size.toLong, islands.size.toLong,
-              dupWords, dupWords * 1000 / nWords))
+    def bruteForce(corpus: Seq[(Long, String)], k: Int) = {
+      val words = corpus.map { case (id, t) => id -> t.split(" ", -1).toSeq }.toMap
+      val winsOf = words.collect { case (id, ws) if ws.size >= k =>
+        id -> (0 to ws.size - k).map(i => i.toLong -> ws.slice(i, i + k).mkString(" "))
       }
-    }.toSet
+      val holders = winsOf.toSeq
+        .flatMap { case (id, ps) => ps.map { case (_, w) => (w, id) } }
+        .groupBy(_._1).map { case (w, xs) => w -> xs.map(_._2).distinct.size }
+      winsOf.flatMap { case (id, ps) =>
+        val dupPos = ps.collect { case (p, w) if holders(w) > 1 => p }.sorted
+        if (dupPos.isEmpty) None else {
+          val islands = dupPos.tail.foldLeft(Vector(Vector(dupPos.head))) {
+            case (acc, p) =>
+              if (p - acc.last.last > k) acc :+ Vector(p) else acc.init :+ (acc.last :+ p)
+          }
+          val nWords = words(id).size.toLong
+          val dupWords = islands.map(i => i.max - i.min + k).sum
+          Some((id, nWords, dupPos.size.toLong, islands.size.toLong,
+                dupWords, dupWords * 1000 / nWords))
+        }
+      }.toSet
+    }
+    def checked(corpus: Seq[(Long, String)], k: Int) = {
+      val expected = bruteForce(corpus, k)
+      val got = Dedup.substringDedup(corpus.toDF("doc_id", "text"), k)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+                   r.getLong(4), r.getLong(5)))
+        .toSet
+      assert(got == expected, s"substring dedup != brute force (k = $k);" +
+        s"\nmissing: ${expected -- got}\nextra: ${got -- expected}")
+      got
+    }
 
-    val got = Dedup.substringDedup(corpus.toDF("doc_id", "text"), k)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-                 r.getLong(4), r.getLong(5)))
-      .toSet
-    assert(got == expected,
-      s"substring dedup != brute force;\nmissing: ${expected -- got}\nextra: ${got -- expected}")
+    assert(checked(spaced, 3).map(_._1) == Set(1L, 2L, 3L),
+      "the multi-space docs share windows; the unrelated doc is absent")
     // pin the merge-boundary intent explicitly, not just set equality
-    val byDoc = got.map(r => r._1 -> r).toMap
+    val byDoc = checked(corpus, k).map(r => r._1 -> r).toMap
     assert(byDoc(1L)._4 == 1L, "gap == k must merge into one span")
     assert(byDoc(2L)._4 == 2L, "gap == k+1 must split into two spans")
     assert(byDoc(3L)._3 == 2L, "within-doc repeat of a cross-doc window counts both occurrences")
@@ -383,25 +400,6 @@ class DedupSpec extends AnyFunSuite {
       .where(not(col("fast") <=> col("hof")))
       .count()
     assert(diff == 0, s"$diff documents disagree between word_window_hashes and the HOF form")
-  }
-
-  test("substringDedup: codegen window keys return identical results (r16 d47 A/B)") {
-    import spark.implicits._
-    // multi-space + repeated-window corpus: the duplicated 3-word window
-    // spans docs, and the double space makes an empty token — both key
-    // paths (md5 over the joined string vs xxhash64 over the byte slice)
-    // must group windows identically
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "a quick brown fox leaps high above the lazy dog"),
-      (3L, "the  quick brown fox jumps over the  lazy dog"),
-      (4L, "completely different words here nothing shared at all today")
-    ).toDF("doc_id", "text")
-    val legacy = Dedup.substringDedup(docs, k = 3, hofWindows = true)
-      .collect().map(_.toString).toSeq
-    val adopted = Dedup.substringDedup(docs, k = 3, hofWindows = false)
-      .collect().map(_.toString).toSeq
-    assert(adopted == legacy, s"window key paths diverged:\n$adopted\nvs\n$legacy")
   }
 
   test("clusterLabels: sorted edge-cache layout returns identical labels (r16 layout A/B)") {

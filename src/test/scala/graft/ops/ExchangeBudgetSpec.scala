@@ -58,8 +58,9 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     // a25: 2 -> 6 with the r17 bucket-major two-pass rank — the extra
     // exchanges are bucket-key (<= 101 distinct k) and branch-aggregate
     // shuffles that replace the single-partition global-rank window
-    // (customer-cardinality data through ONE task); A25RankAB at sf10:
-    // 6.7 -> 2.8 s wall, bit-identical output.
+    // (customer-cardinality data through ONE task); r17 A/B at sf10:
+    // 6.7 -> 2.8 s wall, bit-identical output (OPTIMIZATION_r17.md,
+    // change 3).
     "a25_gini" -> (6, 0),
     "a25b_gini_bucketed" -> (4, 0),
     "a26_market_basket" -> (4, 0),
@@ -73,7 +74,7 @@ class ExchangeBudgetSpec extends AnyFunSuite {
     // SHUFFLE_HASH hint on the verify-attach hs sides (the hint preempts
     // the size-based broadcast these joins got at toy scale; at sf10 they
     // were already shuffled SMJs and the hint removes the 13 GB probe
-    // sort spill — VerifyAttachAB).
+    // sort spill — OPTIMIZATION_r17.md, change 2).
     "d12_dataprep_pipeline" -> (9, 0),
     "d13_levenshtein" -> (1, 1),
     "d14_langid_ngram" -> (1, 1),

@@ -178,26 +178,39 @@ class PlanQualitySpec extends AnyFunSuite {
       s"the per-part aggregate must be persisted and reused by both branches:\n$plan")
   }
 
-  test("j11 (pagerank): sorted edge-cache layout returns identical ranks (r16 layout A/B)") {
-    // The r16 layout change (sortWithinPartitions(src) added to the
-    // src-partitioned edge cache) must be a pure plan-shape change:
-    // both layouts produce the same ranked top-20 on the fixture graph.
+  test("j11 (pagerank): top-20 equals a brute-force integer PageRank on the fixture graph") {
+    // Pins j11's VALUES (the plan pins below only see its shape): the
+    // fixture trade pairs, symmetrized in Scala, run through 3 supersteps
+    // of the same integer millionths arithmetic as pagerankSuperstep
+    // (floor division, rank0 = 1e6), then ordered rank desc, node asc.
     import org.apache.spark.sql.functions.col
     val trades = graft.core.Tables.orders(spark, SparkTestBase.Sf0001)
       .join(graft.core.Tables.lineitem(spark, SparkTestBase.Sf0001),
             col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
       .distinct()
-    def ranked(sorted: Boolean): Seq[String] = {
-      val out = graft.ops.Joins.pagerankRanked(spark, trades, sortedEdgeCache = sorted)
-        .collect().map(_.toString).toSeq
+    val edges = trades.collect().toSeq
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+      .flatMap { case (c, sp) => Seq(c -> sp, sp -> c) }
+    val deg = edges.groupBy(_._1).map { case (n, es) => n -> es.size.toLong }
+    var rank = deg.map { case (n, _) => n -> 1000000L }
+    for (_ <- 1 to 3) {
+      val cpe = rank.map { case (n, r) => n -> r / deg(n) }
+      rank = edges.groupBy(_._2).map { case (dst, es) =>
+        dst -> (150000L + 850000L * es.map(e => cpe(e._1)).sum / 1000000L)
+      }
+    }
+    val expected = rank.toSeq.sortBy { case (n, r) => (-r, n) }.take(20).map {
+      case (n, r) => (if (n % 2 == 1) "supplier" else "customer", n / 2, r)
+    }
+    val got = try {
+      graft.ops.Joins.pagerankRanked(spark, trades).collect().toSeq.map(r =>
+        (r.getString(0), r.getAs[Number](1).longValue, r.getAs[Number](2).longValue))
+    } finally {
       graft.ops.PipelineCache.release()
       spark.sharedState.cacheManager.clearCache()
-      out
     }
-    val legacy = ranked(sorted = false)
-    val adopted = ranked(sorted = true)
-    assert(adopted == legacy, s"layouts diverged:\n$adopted\nvs\n$legacy")
+    assert(got == expected, s"j11 top-20 != brute force:\n$got\nvs\n$expected")
   }
 
   test("j11 (pagerank): supersteps join the cached edge list; no cartesian") {
