@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * swallowed into plausible-looking times — a failed query reports its
   * time AND lands in an "errors" map with the exception message.
   *
-  * Tuning notes (local bench vs cluster):
+  * Tuning notes on the shared [[Mains.session]] (local bench vs cluster):
   *  - AQE on: runtime coalescing + skew handling, same as a real cluster.
   *  - files.maxPartitionBytes lowered to 2 MB: the sf0.1 fixtures are
   *    single ~1-11 MB parquet files, which at the 128 MB default become
@@ -541,7 +541,8 @@ object Bench {
     * mid-sweep host slowdown of up to ~1.7x in the before/after
     * comparison. Nor is consecutive-run agreement a valid stop rule: C2
     * compiles in tiers, so the descent is a STAIRCASE with multi-run
-    * plateaus (RefWarmProbe on this box: 1603, 398, 324, 320, 271, ...
+    * plateaus (measured on a fresh JVM, PLANS.md "Round 12: bench
+    * self-adjudication hardening" item 2: 1603, 398, 324, 320, 271, ...
     * asymptote ~158 around run 20 — agreement-within-10% stops on the
     * 324/320 plateau at 2x the asymptote). Patience over the running
     * min rides through plateaus and stops only when a full window has
@@ -776,7 +777,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Fail fast on a malformed history-reset cutoff: historyBaseline is
     // only consulted AFTER every query has executed, and throwing there
     // would discard the whole multi-minute sweep's measurements over a
@@ -809,18 +809,7 @@ object Bench {
     val wallT0 = System.nanoTime()
     val sampler = new LoadSampler(osBean, sunBean)
     sampler.start()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (2 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session("graft-bench")
 
     // Warm-up: one scan+agg, one broadcast join, one window — triggers
     // codegen compilation and classloading outside the timed region.
@@ -858,18 +847,7 @@ object Bench {
     // it. Parsed before the ref measurement so a probe's ref loops can
     // run in the cheap bounded mode (see refQueryMs's thorough flag).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        require(names.nonEmpty,
-          "SPARK_GRAFT_ONLY is set but names no queries (empty/whitespace value) — " +
-            "unset it to run the full surface or pass comma-separated query names")
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
+    val selected = Mains.selectQueries(only)
 
     // Pinned reference query (frozen vanilla scan->shuffle->agg over a
     // fixed synthetic fixture): measured after warm-up and again at the
@@ -930,7 +908,7 @@ object Bench {
     // total_robust carries no conservative bias from dropped candidates.
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out"))
-    val cpusInt = scala.util.Try(cpus.toInt).getOrElse(-1)
+    val cpusInt = spark.sparkContext.defaultParallelism // local[N]: N
     val heapGbNow = heapBytes / (1024.0 * 1024 * 1024)
     val baseline =
       historyBaseline(outDir.resolve("bench_history.jsonl"), sfDir, cpusInt, heapGbNow,
@@ -976,11 +954,10 @@ object Bench {
     spark.sharedState.cacheManager.clearCache()
     System.gc()
 
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v.secs }
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, QResult(_, Some(e))) =>
-      "\"" + k + "\":\"" + esc(e) + "\""
+      "\"" + k + "\":" + Mains.jsonString(e)
     }.mkString("{", ",", "}")
     val iso = isolated.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val cb = results.map { case (k, _) => "\"" + k + "\":" + cacheBuild.getOrElse(k, false) }
@@ -1092,7 +1069,7 @@ object Bench {
     // heap_guard records whether THIS sweep ran inside the OOM envelope.
     val machine = s"""{"host_cores":$hostCores,"cpus":$cpusInt,"heap_max_gb":${r2(heapGbNow)},"heap_guard":"${if (guardMsg.isDefined) "undersized" else "ok"}","load_before":${r2(loadBefore)},"load_after":${r2(loadAfter)},"load_max":${r2(loadMax)},"proc_cpu_sec":${r2(procCpuSec)},"wall_sec":${r2(wallSec)},"proc_avg_cores":${r2(procAvgCores)},"external_load":${r2(externalLoad)},"external_load_max":${r2(externalLoadMax)},"external_cpu_max":${r2(externalCpuMax)},"cpu_canary_ms_before":${r2(canaryBefore)},"cpu_canary_ms_after":${r2(canaryAfter)},"ref_query_ms_before":${r2(refBefore)},"ref_query_ms_after":${r2(refAfter)},"ref_query_ratio":${r2(refRatio)},"psi_cpu":[${r2(psiBefore._1)},${r2(psiAfter._1)}],"psi_mem":[${r2(psiBefore._2)},${r2(psiAfter._2)}],"psi_io":[${r2(psiBefore._3)},${r2(psiAfter._3)}],"iso_over_median":${r2(isoOverMedian)}}"""
 
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_robust":$totalRobust,"queries":$qs,"errors":$errs,"isolated":$iso,"cache_build":$cb,"storage_mb":$smb,"failed":$failed,"runs":2,"contended":$contended,"slow_box":$slowBox,"slow_box_corroborated":$slowBoxCorr,"machine":$machine,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_robust":$totalRobust,"queries":$qs,"errors":$errs,"isolated":$iso,"cache_build":$cb,"storage_mb":$smb,"failed":$failed,"runs":2,"contended":$contended,"slow_box":$slowBox,"slow_box_corroborated":$slowBoxCorr,"machine":$machine,"sf":${Mains.jsonString(sfDir)}}"""
     println(fullLine)
     // Short trailer AFTER the full line: capture tools that keep only the
     // tail of the output can truncate the per-query map away, so the

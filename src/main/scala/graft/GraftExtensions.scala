@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CassandraToken, HyperplaneBucket, HyperplaneSig32, HyperplaneSig64, JaccardSorted, L2Long, MinHashSig, PortableWordHashes, QCosine, QDotLong, QNorm2, RollingFingerprint, ShingleHashes, WordWindowHashes}
 
 /** SparkSessionExtensions entry point: registers the engine's custom
-  * Catalyst expressions for SQL use. Attach with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Catalyst expressions for SQL use. Attach with the builder's
+  * `withExtensions(new GraftExtensions)` (as [[Mains.session]] does) or
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * SQL surface:

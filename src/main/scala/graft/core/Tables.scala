@@ -29,12 +29,18 @@ object Tables {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     // Session-level contract, documented: nanosAsLong must be true at
-    // PLAN time for any query over events (the session builders in
-    // Bench/Verify/tests set it at construction; this set makes ad-hoc
+    // PLAN time for any query over events (graft.Mains.session and the
+    // test session set it at construction; this set makes ad-hoc
     // sessions work too). It only affects files carrying
     // TIMESTAMP(NANOS) columns; on micros fixtures it is a no-op.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(spark, sfDir, "events")
+    normalizeEventTs(load(spark, sfDir, "events"))
+  }
+
+  /** `events` (batch or stream) with `ts` as TimestampType, whichever of
+    * the physical forms above it was read in.
+    */
+  def normalizeEventTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
       case LongType =>

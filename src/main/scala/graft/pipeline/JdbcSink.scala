@@ -83,7 +83,11 @@ object JdbcSink {
                   wal.foreach(_.start(rangeId, batchId))
                   buf.foreach { r =>
                     bindCols.zipWithIndex.foreach { case (c, i) =>
-                      insert.setObject(i + 1, r.getAs[Any](c))
+                      insert.setObject(i + 1, r.getAs[Any](c) match {
+                        // TIMESTAMP_NTZ: Derby's driver rejects java.time values
+                        case t: java.time.LocalDateTime => java.sql.Timestamp.valueOf(t)
+                        case v => v
+                      })
                     }
                     insert.addBatch()
                   }

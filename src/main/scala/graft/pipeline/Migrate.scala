@@ -1,5 +1,10 @@
 package graft.pipeline
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -223,29 +228,16 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
 
   /** Wait briefly for the observation; None if the metric never arrived
     * (obs.get blocks forever, so bound it — correctness then falls back
-    * to a source re-scan rather than hanging the driver). The wait runs
-    * on a dedicated DAEMON thread, not the global ExecutionContext: a
-    * timed-out get would otherwise pin a shared pool thread forever,
-    * starving the default ForkJoin pool in a long-lived driver.
+    * to a source re-scan rather than hanging the driver).
     */
-  private def observedCounts(obs: Observation): Option[Map[Long, Long]] = {
-    val pending = new java.util.concurrent.CompletableFuture[Map[String, Any]]()
-    val waiter = new Thread(() =>
-      try pending.complete(obs.get)
-      catch { case e: Throwable => pending.completeExceptionally(e) },
-      "graft-observation-wait")
-    waiter.setDaemon(true)
-    waiter.start()
-    val m =
-      try pending.get(30, java.util.concurrent.TimeUnit.SECONDS)
-      catch { case _: java.util.concurrent.TimeoutException => Map.empty[String, Any] }
-    m.get("written").map {
+  private def observedCounts(obs: Observation): Option[Map[Long, Long]] =
+    try Some(Await.result(obs.future, 30.seconds).getAs[Any]("written") match {
       case null => Map.empty[Long, Long]
       case mm: scala.collection.Map[_, _] =>
         mm.map { case (k, v) => k.asInstanceOf[Number].longValue() -> v.asInstanceOf[Number].longValue() }.toMap
       case other => sys.error(s"unexpected metric type: ${other.getClass}")
-    }
-  }
+    })
+    catch { case _: TimeoutException => None }
 
   /** Drive to completion (reference main loop), bounded passes. */
   def run(maxPasses: Int = 3): Unit = {

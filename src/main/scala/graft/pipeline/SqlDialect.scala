@@ -38,7 +38,7 @@ trait SqlDialect extends Serializable {
     case FloatType => "REAL"
     case BooleanType => "BOOLEAN"
     case DateType => "DATE"
-    case TimestampType => "TIMESTAMP"
+    case TimestampType | TimestampNTZType => "TIMESTAMP"
     case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
     case BinaryType => "BLOB"
     case StringType => "VARCHAR(4000)"
@@ -138,6 +138,7 @@ object MySqlDialect extends SqlDialect {
   override def sqlType(dt: DataType): String = dt match {
     case StringType => "VARCHAR(1024)"
     case TimestampType => "TIMESTAMP(6)"
+    case TimestampNTZType => "DATETIME(6)"
     case _ => super.sqlType(dt)
   }
 

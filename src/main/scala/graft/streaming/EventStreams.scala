@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * (see core.Tables.events): TIMESTAMP(NANOS), read as long nanos and
   * floor-divided to micros, and native TIMESTAMP(MICROS). A file-source
   * stream needs the schema up front, so probe the footer once with a batch
-  * read and branch — batch and stream then agree row-for-row either way.
+  * read, then normalize `ts` exactly as the batch loader does
+  * (Tables.normalizeEventTs) — batch and stream agree row-for-row.
   */
 object EventStreams {
 
@@ -38,19 +39,10 @@ object EventStreams {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val footerTsType =
       spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
-    val stream = spark.readStream
+    graft.core.Tables.normalizeEventTs(spark.readStream
       .schema(eventSchemaRaw(footerTsType))
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    footerTsType match {
-      case LongType => // nanos-as-long legacy fixture
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType =>
-        stream.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => stream
-      case other => throw new IllegalStateException(
-        s"events.ts has unexpected type $other (expected long nanos, TIMESTAMP, or TIMESTAMP_NTZ)")
-    }
+      .parquet(sfDir))
   }
 
   /** Streaming twin of e1_tumbling_counts: watermarked tumbling windows. */

@@ -38,13 +38,7 @@ object Compact {
   def main(args: Array[String]): Unit = {
     val inDir = args(0); val outDir = args(1); val sortCol = args(2)
     val targetMb = if (args.length > 3) args(3).toLong else 128L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session("graft-compact")
     val (before, after, bytes) = run(spark, inDir, outDir, sortCol, targetMb * 1024 * 1024)
     println(s"[compact] $before files (${bytes / 1024} KiB) -> $after files")
     spark.stop()

@@ -46,16 +46,7 @@ object DedupScaleProbe {
     val src = args.headOption.getOrElse("/root/testdata/sf0.01")
     val work = args.lift(1).getOrElse("/tmp/dedup_scale")
     val ks = args.lift(2).getOrElse("1,10,100").split(",").map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session("graft-dedup-scale-probe")
 
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan (and optionally times)
   * for named queries — the `.explain("formatted")` loop the build plan
   * calls for after each operator goes green. `--time` runs the printed
@@ -15,17 +13,7 @@ object Explain {
     val sfDir = args.head
     val time = args.contains("--time")
     val names = args.tail.filterNot(_ == "--time")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (2 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session("graft-explain")
     names.foreach { name =>
       println(s"\n========== $name ==========")
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -66,14 +66,7 @@ object ProfileQuery {
       sys.error("usage: ProfileQuery <query-name> [sfDir] [reps]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.Mains.session("graft-profile-query")
     val q = graft.SparkEntry.queries.getOrElse(qname,
       sys.error(s"unknown query $qname"))
     val log = new StageLog

@@ -76,15 +76,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(src, dst, kStr) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session("graft-scale-up")
     run(spark, src, dst, kStr.toInt)
     spark.stop()
   }

@@ -200,13 +200,8 @@ object ScanAudit {
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
+    val selected = graft.Mains.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = graft.Mains.session("graft-scan-audit")
     // Deterministic shuffle counts for ExchangeBudgetSpec's pins: AQE's
     // runtime SMJ->BHJ conversion can drop a shuffle or not depending on
     // measured stage sizes (q5 flips 2<->3 at sf0.001), so the budget is
@@ -216,29 +211,11 @@ object ScanAudit {
     // 4<->5 e6 oscillation was AQE stage-size replanning surviving even
     // with runtime broadcast conversion disabled). ExchangeBudgetSpec
     // pins are taken in THIS mode so every pin is an exact shape, not an
-    // observed upper bound.
-    val b2 = if (sys.env.contains("SPARK_GRAFT_NO_AQE"))
-      builder.config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    else if (sys.env.contains("SPARK_GRAFT_NO_AQE_BROADCAST"))
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    else builder
-    val spark = b2.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optional subset (same contract as Bench/Verify's SPARK_GRAFT_ONLY).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        require(names.nonEmpty,
-          "SPARK_GRAFT_ONLY is set but names no queries (empty/whitespace value) — " +
-            "unset it to audit the full surface or pass comma-separated query names")
-        val unknown = names -- graft.SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-        graft.SparkEntry.queries.view.filterKeys(names).toMap
-      case None => graft.SparkEntry.queries
-    }
+    // observed upper bound. Both are runtime SQL confs.
+    if (sys.env.contains("SPARK_GRAFT_NO_AQE"))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    if (sys.env.contains("SPARK_GRAFT_NO_AQE") || sys.env.contains("SPARK_GRAFT_NO_AQE_BROADCAST"))
+      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sf)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone build step for the materialized MinHash signature table
   * (VERDICT r6 #5): writes the portable (doc_id, hpos, sig) table to
   * parquet once, then times a consumer pass (the d6b/d6c band join +
@@ -21,15 +19,7 @@ object SignatureTable {
     val out =
       if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_sigtable").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session("graft-signature-table")
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -47,15 +47,7 @@ object SkewUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst) = args.take(2)
     val hotPct = args.lift(2).map(_.toInt).getOrElse(50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Mains.session("graft-skew-up")
     run(spark, src, dst, hotPct)
     spark.stop()
   }

@@ -107,7 +107,8 @@ class BenchGuardsSpec extends AnyFunSuite {
     // separate asserts pin the defaults themselves.)
     val flat = Bench.warmedMinMs(feed(100.0), patience = 4, minPlateauMs = 0)
     assert((flat.ms, flat.runs, flat.exit) === ((100.0, 5, "plateau")))
-    // The measured descent shape (RefWarmProbe): a multi-run PLATEAU at
+    // The measured descent shape (PLANS.md, "Round 12: bench
+    // self-adjudication hardening", item 2): a multi-run PLATEAU at
     // 2x the asymptote must NOT stop the loop — the later tier drop
     // resets patience and the returned min is the post-drop floor, not
     // the plateau. (Consecutive-agreement, the first attempted rule,

@@ -8,8 +8,10 @@ import graft.SparkTestBase
   * not just warned about: a sweep over the judged surface must hold at
   * most one query's construction-time persists, and an explicit release
   * must leave the cache manager empty. This is the in-suite twin of
-  * graft.Verify's per-query clearCache + exit warning and
-  * DriverGateReplica's 20-iteration stability evidence.
+  * graft.Verify's per-query clearCache + exit warning and the repeated
+  * correctness-gate runs recorded in PLANS.md under "Round 6: s18
+  * determinism" (with its sf0.1 leg) and the s18 leg of the round-9
+  * session-close gates.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark

@@ -168,17 +168,21 @@ class JdbcSinkSpec extends AnyFunSuite {
     val url = freshUrl()
     val df = spark.range(40).select(
       col("id"),
-      when(col("id") % 5 === 0, lit(null))
+      when(col("id") % 6 === 0, lit(null))
         .otherwise(expr("timestamp_micros(1700000000123456 + id * 3600000001)")).as("ts"),
-      when(col("id") % 5 === 1, lit(null))
+      when(col("id") % 6 === 1, lit(null))
         .otherwise(expr("date_add(DATE'2024-02-27', CAST(id AS INT))")).as("dt"),
-      when(col("id") % 5 === 2, lit(null))
+      when(col("id") % 6 === 2, lit(null))
         .otherwise(expr("CAST(id * 1234.57 - 5000 AS DECIMAL(18,2))")).as("amount"),
-      when(col("id") % 5 === 3, lit(null))
+      when(col("id") % 6 === 3, lit(null))
         .otherwise(expr("unhex(concat('00FF', lpad(hex(id), 4, '0')))")).as("payload"),
-      when(col("id") % 5 === 4, lit(null)).otherwise(col("id") % 2 === 0).as("flag"),
+      when(col("id") % 6 === 4, lit(null)).otherwise(col("id") % 2 === 0).as("flag"),
+      // the fixtures' orders/lineitem/events carry TIMESTAMP_NTZ columns
+      when(col("id") % 6 === 5, lit(null))
+        .otherwise(expr("TIMESTAMP_NTZ'2024-01-15 10:20:30.123456' + make_dt_interval(0, CAST(id AS INT), 0, 0)"))
+        .as("ntz"),
       (col("id") % 4).as("range_id"))
-    val columns = Seq("id", "ts", "dt", "amount", "payload", "flag")
+    val columns = Seq("id", "ts", "dt", "amount", "payload", "flag", "ntz")
     val conn = DriverManager.getConnection(url)
     try Ddl.ensureTables(conn, DerbyDialect, "typed",
       StructType(df.schema.filter(f => columns.contains(f.name))), Seq("id"))
@@ -190,17 +194,18 @@ class JdbcSinkSpec extends AnyFunSuite {
       case d: java.sql.Date => d.toLocalDate
       case other => other
     }
-    val expected = df.collect().map(r => r.getLong(0) -> (1 to 5).map(i => comparable(r.get(i)))).toMap
+    val expected = df.collect().map(r => r.getLong(0) -> (1 to 6).map(i => comparable(r.get(i)))).toMap
     val read = DriverManager.getConnection(url)
     val actual = try {
       val rs = read.createStatement().executeQuery(
-        "SELECT \"id\", \"ts\", \"dt\", \"amount\", \"payload\", \"flag\" FROM \"typed\"")
+        "SELECT \"id\", \"ts\", \"dt\", \"amount\", \"payload\", \"flag\", \"ntz\" FROM \"typed\"")
       val out = Map.newBuilder[Long, Seq[Any]]
       while (rs.next()) {
         def orNull[T](v: T): Any = if (rs.wasNull()) null else v
         out += rs.getLong(1) -> Seq(
           orNull(rs.getTimestamp(2)), orNull(rs.getDate(3)), orNull(rs.getBigDecimal(4)),
-          orNull(rs.getBytes(5)), orNull(rs.getBoolean(6))).map(comparable)
+          orNull(rs.getBytes(5)), orNull(rs.getBoolean(6)),
+          Option(rs.getTimestamp(7)).map(_.toLocalDateTime).orNull).map(comparable)
       }
       out.result()
     } finally read.close()

@@ -73,6 +73,13 @@ class MySqlDialectSpec extends AnyFunSuite {
     assert(MySqlEmu.recorded.contains(
       MySqlDialect.createWalTableSql("migration_wal")))
     assert(MySqlDialect.createWalTableSql("migration_wal").contains("`migration_wal`"))
+    // the fixtures' TIMESTAMP_NTZ columns map to a zoneless DATETIME
+    assert(MySqlDialect.createSinkTableSql("orders",
+      StructType(Seq(StructField("o_orderkey", LongType),
+        StructField("o_orderdate", TimestampNTZType), StructField("loaded_at", TimestampType))),
+      Seq("o_orderkey")) ==
+      "CREATE TABLE `orders` (`o_orderkey` BIGINT, `o_orderdate` DATETIME(6), " +
+        "`loaded_at` TIMESTAMP(6), PRIMARY KEY (`o_orderkey`))")
     // and they actually created queryable tables
     assert(queryLong(url, "SELECT COUNT(*) FROM files") == 0L)
     assert(queryLong(url, "SELECT COUNT(*) FROM migration_wal") == 0L)
