@@ -29,7 +29,10 @@ final case class ParquetSource(path: String) extends MigrateSource {
   */
 trait MigrateSink extends Serializable {
   def write(df: DataFrame, rangeIds: Seq[Long]): Unit
-  /** Rows currently in the sink per range (T5 verify); control-sized. */
+  /** Rows currently in the sink per range (T5 verify). Counts only the
+    * given `rangeIds`; rows whose `range_id` is NULL are not counted; at
+    * most one entry per range, so the result is control-sized.
+    */
   def countsByRange(spark: SparkSession, rangeIds: Seq[Long]): Map[Long, Long]
   /** Total sink rows (T6 global validation); 0 if the sink is absent. */
   def totalCount(spark: SparkSession): Long
@@ -51,12 +54,13 @@ final case class ParquetSink(path: String) extends MigrateSink {
     * with a _SUCCESS marker but no partition directories; schema
     * inference then throws UNABLE_TO_INFER_SCHEMA. That condition means
     * "zero data files", so the verify/validate reads treat it as an
-    * empty sink instead of crashing (EmptyInputSpec).
+    * empty sink instead of crashing (EmptyInputSpec), as they treat a
+    * sink path that was never written (PATH_NOT_FOUND).
     */
   private def readSink(spark: SparkSession): Option[DataFrame] =
     try Some(spark.read.parquet(path)) catch {
       case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getCondition).contains("UNABLE_TO_INFER_SCHEMA") => None
+          if Option(e.getCondition).exists(Set("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")) => None
     }
 
   def countsByRange(spark: SparkSession, rangeIds: Seq[Long]): Map[Long, Long] =
@@ -69,18 +73,13 @@ final case class ParquetSink(path: String) extends MigrateSink {
         .toMap
     }.getOrElse(Map.empty)
 
-  def totalCount(spark: SparkSession): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      readSink(spark).map(_.count()).getOrElse(0L)
-    else 0L
-  }
+  def totalCount(spark: SparkSession): Long = readSink(spark).map(_.count()).getOrElse(0L)
 }
 
-/** JDBC binding: the batched idempotent INSERT IGNORE sink (K1/K2).
-  * Requires the sink table to carry the range_id column so per-range
-  * verification stays a single control-sized query.
+/** JDBC binding: the batched idempotent INSERT IGNORE sink (K1/K2); the
+  * sink table carries range_id. Verify runs one parameter-free GROUP BY
+  * (one plan per table, no placeholder cap on numRanges) and filters the
+  * ids here; range_id has no index, so an IN-list scans the table too.
   */
 final case class JdbcTableSink(cfg: JdbcSink.JdbcConfig) extends MigrateSink {
   private def q(id: String) = cfg.dialect.quote(id)
@@ -90,33 +89,29 @@ final case class JdbcTableSink(cfg: JdbcSink.JdbcConfig) extends MigrateSink {
     try f(conn) finally conn.close()
   }
 
+  private def query[T](conn: java.sql.Connection, sql: String)(f: java.sql.ResultSet => T): T = {
+    val st = conn.createStatement()
+    try f(st.executeQuery(sql)) finally st.close()
+  }
+
   def write(df: DataFrame, rangeIds: Seq[Long]): Unit = JdbcSink.write(df, cfg)
 
-  def countsByRange(spark: SparkSession, rangeIds: Seq[Long]): Map[Long, Long] =
-    if (rangeIds.isEmpty) Map.empty else withConn { conn =>
-    // Bound parameters, never interpolated values (control-sized list).
-    val qs = Seq.fill(rangeIds.size)("?").mkString(", ")
-    val ps = conn.prepareStatement(
-      s"SELECT ${q("range_id")}, COUNT(*) FROM ${q(cfg.table)} " +
-        s"WHERE ${q("range_id")} IN ($qs) GROUP BY ${q("range_id")}")
-    try {
-      rangeIds.zipWithIndex.foreach { case (id, i) => ps.setLong(i + 1, id) }
-      val rs = ps.executeQuery()
-      val buf = scala.collection.mutable.Map.empty[Long, Long]
-      while (rs.next()) buf += rs.getLong(1) -> rs.getLong(2)
-      buf.toMap
-    } finally ps.close()
+  def countsByRange(spark: SparkSession, rangeIds: Seq[Long]): Map[Long, Long] = withConn { conn =>
+    val wanted = rangeIds.toSet
+    val rid = q("range_id")
+    query(conn, s"SELECT $rid, COUNT(*) FROM ${q(cfg.table)} GROUP BY $rid") { rs =>
+      val buf = Map.newBuilder[Long, Long]
+      while (rs.next()) {
+        val id = rs.getLong(1)
+        if (!rs.wasNull() && wanted(id)) buf += id -> rs.getLong(2)
+      }
+      buf.result()
+    }
   }
 
   def totalCount(spark: SparkSession): Long = withConn { conn =>
     if (!cfg.dialect.tableExists(conn, cfg.table)) 0L
-    else {
-      val st = conn.createStatement()
-      try {
-        val rs = st.executeQuery(s"SELECT COUNT(*) FROM ${q(cfg.table)}")
-        rs.next(); rs.getLong(1)
-      } finally st.close()
-    }
+    else query(conn, s"SELECT COUNT(*) FROM ${q(cfg.table)}") { rs => rs.next(); rs.getLong(1) }
   }
 }
 
@@ -186,7 +181,10 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
     */
   def runOnce(): Seq[Long] = {
     checkpoints.seedIfEmpty(ranges)
-    val todo = checkpoints.fetchIncomplete()
+    migrate(checkpoints.fetchIncomplete())
+  }
+
+  private def migrate(todo: Seq[CheckpointRange]): Seq[Long] = {
     if (todo.isEmpty) return Seq.empty
     val todoIds = todo.map(_.range_id)
 
@@ -239,12 +237,13 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
     })
     catch { case _: TimeoutException => None }
 
-  /** Drive to completion (reference main loop), bounded passes. */
+  /** Drive to completion (reference main loop), bounded passes; seeds once. */
   def run(maxPasses: Int = 3): Unit = {
-    var pass = 0
-    while (checkpointsIncomplete() && pass < maxPasses) {
-      runOnce()
-      pass += 1
+    checkpoints.seedIfEmpty(ranges)
+    var todo = checkpoints.fetchIncomplete()
+    for (pass <- 1 to maxPasses if todo.nonEmpty) {
+      migrate(todo)
+      if (pass < maxPasses) todo = checkpoints.fetchIncomplete()
     }
   }
 

@@ -63,6 +63,19 @@ class JdbcMigrateSpec extends AnyFunSuite {
     } finally conn.close()
   }
 
+  private def execute(url: String, sql: String): Unit = {
+    val conn = DriverManager.getConnection(url)
+    try conn.createStatement().executeUpdate(sql) finally conn.close()
+  }
+
+  /** A sink row whose key no order carries (o_orderkey > 0). */
+  private def straySinkRow(url: String, fileId: Long, rangeId: String): Unit =
+    execute(url, "INSERT INTO \"orders_sink\" (\"file_id\", \"o_custkey\", " +
+      s"\"o_totalprice\", \"range_id\") VALUES ($fileId, 0, 0.0, $rangeId)")
+
+  private val IncompleteSql =
+    "SELECT COUNT(*) FROM \"migration_checkpoint\" WHERE \"checkpoint\" < \"range_end\""
+
   test("migrates every order into Derby exactly once; checkpoints + WAL + validation agree") {
     val (url, cfg) = freshBinding()
     val m = new Migrate(spark, cfg)
@@ -124,5 +137,49 @@ class JdbcMigrateSpec extends AnyFunSuite {
     m.run()
     assert(!m.checkpointsIncomplete())
     assert(m.validate().status == "OK")
+  }
+
+  test("T5: a stray sink row in a pending range fails the pass; no checkpoint completes") {
+    val (url, cfg) = freshBinding()
+    straySinkRow(url, -1L, "2")
+    val e = intercept[RuntimeException] { new Migrate(spark, cfg).runOnce() }
+    assert(e.getMessage == "range verification failed: 2")
+    assert(queryLong(url, IncompleteSql) == 4L)
+  }
+
+  test("T5: sink rows outside the pass and rows with NULL range_id do not fail verification") {
+    val (url, cfg) = freshBinding()
+    val sink = cfg.sink.get
+    straySinkRow(url, -1L, "NULL")
+    // a NULL range_id belongs to no range; in particular not to range 0
+    assert(sink.countsByRange(spark, Seq(0L)) == Map.empty)
+    new Migrate(spark, cfg).run()
+    // resume ranges 0 and 2 while completed range 1 holds a stray row
+    execute(url, "UPDATE \"migration_checkpoint\" SET \"checkpoint\" = \"range_start\" " +
+      "WHERE \"range_id\" IN (0, 2)")
+    straySinkRow(url, -2L, "1")
+    assert(new Migrate(spark, cfg).runOnce() == Seq(0L, 2L))
+    assert(queryLong(url, IncompleteSql) == 0L)
+    assert(sink.countsByRange(spark, Seq(0L, 2L)).keySet == Set(0L, 2L))
+  }
+
+  test("a single-pass run() seeds once: seed, fetch, mark, re-fetch") {
+    val (_, cfg) = freshBinding()
+    val inner = cfg.checkpoints.get
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    val counted = new CheckpointStore {
+      def seedIfEmpty(ranges: Seq[graft.core.Tokens.TokenRange]): Unit = {
+        calls += "seed"; inner.seedIfEmpty(ranges)
+      }
+      def all(): Seq[CheckpointRange] = { calls += "all"; inner.all() }
+      override def fetchIncomplete(): Seq[CheckpointRange] = {
+        calls += "fetch"; inner.fetchIncomplete()
+      }
+      def markComplete(rangeIds: Seq[Long]): Unit = {
+        calls += "mark"; inner.markComplete(rangeIds)
+      }
+    }
+    new Migrate(spark, cfg.copy(checkpoints = Some(counted))).run()
+    assert(calls == Seq("seed", "fetch", "mark", "fetch"))
   }
 }

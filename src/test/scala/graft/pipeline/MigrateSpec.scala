@@ -44,6 +44,7 @@ class MigrateSpec extends AnyFunSuite {
     val cfg = freshCfg(failRanges = Set(3L))
     val m = new Migrate(spark, cfg)
     intercept[RuntimeException] { m.runOnce() }
+    assert(m.validate().dst_count == 0L) // a never-written sink reads as empty
     val cps = new Checkpoints(spark, cfg.checkpointPath)
     assert(cps.fetchIncomplete().size == cfg.numRanges) // nothing marked complete
     // resume without the induced failure

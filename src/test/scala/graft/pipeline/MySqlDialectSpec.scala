@@ -185,6 +185,21 @@ class MySqlDialectSpec extends AnyFunSuite {
     assert(queryLong(url, "SELECT COUNT(*) FROM orders_sink") == 1500L)
     assert(queryLong(url,
       "SELECT COUNT(*) FROM migration_wal WHERE status <> 'COMMITTED'") == 0L)
+    // a second pass over two reset ranges: the verify statement has no
+    // placeholder and its text repeats exactly
+    def verifies = MySqlEmu.recorded.asScala
+      .filter(_.startsWith("SELECT `range_id`, COUNT(*) FROM `orders_sink`"))
+    assert(verifies.size == 1)
+    val conn2 = DriverManager.getConnection(url)
+    try conn2.createStatement().executeUpdate(
+      "UPDATE migration_checkpoint SET checkpoint = range_start WHERE range_id IN (1, 3)")
+    finally conn2.close()
+    val m2 = new Migrate(spark, mcfg)
+    m2.run()
+    assert(!m2.checkpointsIncomplete())
+    assert(queryLong(url, "SELECT COUNT(*) FROM orders_sink") == 1500L)
+    assert(verifies.size == 2 && verifies.distinct.size == 1)
+    assert(!verifies.head.contains("?"))
   }
 
   private implicit class JListOps(l: java.util.List[String]) {
