@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.obs.StageLog
+
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line {"metric":"total", ...} with per-query seconds.
+  * prints one JSON line {"metric":"total", ...} with per-query seconds
+  * and per-query executor CPU seconds.
   *
   * Honesty rules (round-2): every query runs TWICE and reports the MIN
   * (one-time codegen/classload noise measured away); failures are NOT
@@ -36,19 +39,27 @@ import org.apache.spark.sql.SparkSession
   * Load average only sees runnable co-processes; the round-10 close then
   * measured a 33%-slower sweep at external_load=0 (hypervisor steal /
   * thermal / bandwidth). So the artifact additionally records PSI
-  * pressure (cpu/mem/io, some avg10), a fixed-work single-thread CPU
-  * canary before/after, and a "slow_box" verdict: the median ratio of
-  * the isolated re-runs over their per-query ISOLATED history medians
-  * (falling back to sweep medians) — uniform elevation across quiet
-  * GC'd re-measures of real queries means something box-wide moved;
+  * pressure (cpu/mem/io, some avg10) and a "slow_box" verdict: the median
+  * ratio of the isolated re-runs over their per-query ISOLATED history
+  * medians (falling back to sweep medians) — uniform elevation across
+  * quiet GC'd re-measures of real queries means something box-wide moved;
   * one regressed query moves only its own ratio, never the median.
   * slow_box is null when no baseline exists, and a code change slowing
-  * many queries uniformly also trips it — the recorded canary and PSI
-  * are disambiguators, and since round 12 the pinned reference query's
-  * ratio against its own recency-windowed history median is folded into
-  * a second boolean, slow_box_corroborated (host slowdown moves the
-  * zero-engine-code ref query WITH the real queries; a code regression
-  * cannot), making the artifact self-adjudicating on that axis too.
+  * many queries uniformly also trips it.
+  *
+  * Engine work ("cpu_s"): per query, the executor CPU seconds summed over
+  * every stage its timed run completed — construction jobs as well as the
+  * count — min of the two runs, recorded through [[graft.obs.StageLog]];
+  * "total_cpu_s" is their sum. CPU-s does not bill the time a task waits
+  * for a core: beside four of our own busy loops on a 4-vCPU box (sf0.1,
+  * local[4]) per-query wall time doubled while CPU-s moved no more than it
+  * does between two quiet sweeps. So a contended or slow_box sweep whose
+  * cpu_s holds measured the box, and one whose cpu_s rose with its wall
+  * time measured the engine. Limit: a host-wide per-CPU slowdown (total
+  * CPU-s differed by 3% and by 10% between two pairs of quiet sweeps on
+  * one box) moves cpu_s the same way a uniform engine regression would.
+  * Interleaved A/B pairs (perfbench) settle that question; a single
+  * sweep does not.
   *
   * Headline honesty (round-13): the raw sweep total ("value") swings
   * ±20% on an unchanged engine, so the artifact carries a companion
@@ -60,31 +71,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** What the history log establishes as "normal" for this fixture set
-    * and harness configuration: per-query sweep/isolated medians plus the
-    * reference-query median (ms; -1 when no line recorded it). See
+    * and harness configuration: per-query sweep and isolated medians. See
     * [[historyBaseline]] for admission rules.
     */
   private[graft] final case class HistoryBaseline(
       sweep: Map[String, Double],
-      iso: Map[String, Double],
-      refQueryMs: Double)
-
-  /** Back-compat pair view of [[historyBaseline]] (sweep, isolated). */
-  private[graft] def historyMedians(histFile: java.nio.file.Path,
-                                    sfDir: String,
-                                    cpus: Int = -1,
-                                    heapGb: Double = -1.0,
-                                    window: Int = DefaultHistoryWindow): (Map[String, Double], Map[String, Double]) = {
-    val b = historyBaseline(histFile, sfDir, cpus, heapGb, window)
-    (b.sweep, b.iso)
-  }
+      iso: Map[String, Double])
 
   /** Recency window for every history median: only the most recent N
-    * admitted observations per query (and per the ref query) enter the
-    * median. Round-11's close read iso_over_median=0.83 because the
-    * baseline still blended pre-speedup lines — a stale-SLOW baseline
-    * degrades slow_box in the false-negative direction (a real slowdown
-    * has to climb over the old slow median before the ratio moves).
+    * admitted observations per query enter the median. Round-11's close
+    * read iso_over_median=0.83 because the baseline still blended
+    * pre-speedup lines — a stale-SLOW baseline degrades slow_box in the
+    * false-negative direction (a real slowdown has to climb over the old
+    * slow median before the ratio moves).
     * Five observations is enough to damp one noisy sweep while tracking
     * a deliberate speedup within two closes.
     */
@@ -96,9 +95,7 @@ object Bench {
     * isolated re-measure), ISOLATED-run medians (the like-for-like
     * baseline for the slow_box verdict — isolated re-runs are quiet
     * GC'd cold-cache measurements, a different regime from in-sweep
-    * times), and the pinned reference query's median ms (the host-vs-
-    * engine disambiguator: min of each admitted line's before/after).
-    * json4s is Spark's own bundled JSON library. Total: unreadable or
+    * times). json4s is Spark's own bundled JSON library. Total: unreadable or
     * malformed history yields empty maps (first round, fresh clone).
     *
     * Line admission is ATOMIC: a malformed value mid-object (a JSON null
@@ -176,7 +173,7 @@ object Bench {
     // at entry, before the sweep spends minutes measuring.)
     val since: Option[java.time.Instant] = parseHistorySince(sinceTs)
     if (!java.nio.file.Files.isReadable(histFile))
-      return HistoryBaseline(Map.empty, Map.empty, -1.0)
+      return HistoryBaseline(Map.empty, Map.empty)
     // Compare CANONICAL paths: the bench_latest refresh canonicalizes the
     // judged-fixture path, so a sweep invoked via a symlink writes history
     // under the alias — raw string equality would then fragment the median
@@ -189,7 +186,6 @@ object Bench {
     val canonSf = canonPath(sfDir)
     val perQuery = scala.collection.mutable.Map.empty[String, List[Double]]
     val perQueryIso = scala.collection.mutable.Map.empty[String, List[Double]]
-    var refSamples: List[Double] = Nil // newest-first, like the per-query lists
     var legacyExcluded = 0; var mismatchedLines = 0
     var abnormalLines = 0; var preSinceLines = 0; var noTsLines = 0
     java.nio.file.Files.readAllLines(histFile).asScala.foreach { line =>
@@ -282,14 +278,7 @@ object Bench {
                 }
                 case _ => Nil
               }
-            // reference-query ms for this line: min of before/after when
-            // both recorded (each is already a warmed min), whichever
-            // exists otherwise; absent on pre-r11 lines
-            val refMs = Seq(numField(j \ "machine" \ "ref_query_ms_before"),
-                            numField(j \ "machine" \ "ref_query_ms_after"))
-              .flatten.filter(v => v > 0 && !v.isNaN)
-              .reduceOption((a: Double, b: Double) => math.min(a, b))
-            (collectLocal("queries"), collectLocal("isolated"), refMs)
+            (collectLocal("queries"), collectLocal("isolated"))
           }
         } else null
       }.toOption.foreach {
@@ -301,11 +290,9 @@ object Bench {
         case "preSince" => preSinceLines += 1
         case "noTs"     => noTsLines += 1
         case (qs: List[(String, Double)] @unchecked,
-              iso: List[(String, Double)] @unchecked,
-              refMs: Option[Double] @unchecked) =>
+              iso: List[(String, Double)] @unchecked) =>
           qs.foreach { case (k, d) => perQuery.updateWith(k)(o => Some(d :: o.getOrElse(Nil))) }
           iso.foreach { case (k, d) => perQueryIso.updateWith(k)(o => Some(d :: o.getOrElse(Nil))) }
-          refMs.foreach(r => refSamples = r :: refSamples)
         case _ => ()
       }
     }
@@ -338,9 +325,7 @@ object Bench {
     }
     def medians(m: scala.collection.mutable.Map[String, List[Double]]) =
       m.view.mapValues(xs => medianOf(windowed(xs))).toMap
-    val refMedian =
-      if (refSamples.isEmpty) -1.0 else medianOf(windowed(refSamples))
-    HistoryBaseline(medians(perQuery), medians(perQueryIso), refMedian)
+    HistoryBaseline(medians(perQuery), medians(perQueryIso))
   }
 
   /** Linux pressure-stall "some avg10" percentage for cpu/memory/io, or
@@ -356,23 +341,6 @@ object Bench {
         java.nio.file.Paths.get(s"/proc/pressure/$kind")).get(0)
       "avg10=([0-9.]+)".r.findFirstMatchIn(line).map(_.group(1).toDouble).getOrElse(-1.0)
     } catch { case _: Exception => -1.0 }
-
-  /** Fixed-work single-thread CPU canary (xorshift mix, min-of-3, ms):
-    * a box-speed reference that is independent of Spark, parquet and the
-    * page cache. Identical code + identical work, so artifact-to-artifact
-    * drift in this number IS host slowdown (thermal/steal/bandwidth),
-    * whatever the load average claims.
-    */
-  private def cpuCanaryMs(): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var i = 0
-      while (i < 30000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      if (x == 42L) println("") // defeat dead-code elimination
-      (System.nanoTime() - t0) / 1e6
-    }
-    once(); math.min(once(), math.min(once(), once()))
-  }
 
   /** Periodic (load-average, own-cpu) sampler covering the whole sweep.
     * The endpoint-only contended verdict had two blind spots: (a) the
@@ -483,200 +451,6 @@ object Bench {
       (loadMax, extLoad, extCpu)
     }
   }
-
-  /** Pinned reference query: a FROZEN plan over a fixed synthetic
-    * fixture that exercises the full Spark stack (parquet scan ->
-    * shuffle -> aggregate) using ONLY vanilla Spark operators — no
-    * graft expressions, no engine code on the path. Recorded like the
-    * CPU canary, it disambiguates slow_box's one blind spot: a code
-    * change that slows many REAL queries uniformly cannot move this
-    * query (nothing of the engine executes here), while host slowdown
-    * (steal/thermal/bandwidth) moves real queries and this one alike.
-    */
-  private[graft] def writeRefFixture(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    spark.range(0, 400000, 1, 8)
-      .select((col("id") % 4096).as("k"),
-              ((col("id") * 2654435761L) % 1000003L).as("v"))
-      .write.mode("overwrite").parquet(dir)
-  }
-
-  private[graft] def refQueryDf(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.read.parquet(dir)
-      .groupBy("k")
-      .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-      .agg(sum(col("sv")).as("tv"), sum(col("n")).as("tn"), count(lit(1)).as("groups"))
-  }
-
-  /** Result of [[warmedMinMs]]: the warmed minimum, how many runs it
-    * took, WHY the loop stopped (`"plateau"` = the stop rule was
-    * satisfied naturally; `"maxMeasuredMs"` / `"maxRuns"` = a bound
-    * clipped the descent mid-flight, so `ms` may still be warm-up-
-    * inflated), and the cumulative measured time. The exit tag exists
-    * because a natural plateau exit and a bound clip at the same run
-    * count were previously indistinguishable in the diagnostic log —
-    * the scaladoc told readers to treat bound-clipped stops warily but
-    * the artifact trail never said which kind of stop happened.
-    *
-    * When a final run crosses BOTH bounds at once (runs hits maxRuns on
-    * the same iteration cumMs crosses maxMeasuredMs), the tag prefers
-    * `"maxMeasuredMs"` without asking which bound the loop condition
-    * tripped first — both are bound clips carrying the same wariness
-    * signal, so the preference is cosmetic, not semantic.
-    */
-  private[graft] final case class WarmedMin(
-      ms: Double, runs: Int, exit: String, measuredMs: Double)
-
-  /** Warmed-minimum measurement: run `once` (which returns its own wall
-    * duration) until the RUNNING MIN stops improving by more than `tol`
-    * for `patience` consecutive runs AND at least `minMeasuredMs` of
-    * cumulative measured time has elapsed, bounded at `maxRuns`; returns
-    * a [[WarmedMin]] (min over all runs, runs executed, exit reason,
-    * cumulative measured ms).
-    *
-    * A single fixed warm pass is not enough on a freshly-forked JVM: the
-    * r11 close read ref_query_ms_before 260.6 ms against after 154.4 ms
-    * — pure C2 warm-up that runs in the direction that can MASK a
-    * mid-sweep host slowdown of up to ~1.7x in the before/after
-    * comparison. Nor is consecutive-run agreement a valid stop rule: C2
-    * compiles in tiers, so the descent is a STAIRCASE with multi-run
-    * plateaus (measured on a fresh JVM, PLANS.md "Round 12: bench
-    * self-adjudication hardening" item 2: 1603, 398, 324, 320, 271, ...
-    * asymptote ~158 around run 20 — agreement-within-10% stops on the
-    * 324/320 plateau at 2x the asymptote). Patience over the running
-    * min rides through plateaus and stops only when a full window has
-    * failed to set a new floor.
-    *
-    * The time floor exists because the descent is TIME-driven, not
-    * run-count-driven: tier drops land when C2's BACKGROUND compile
-    * threads finish, so at ~0.2 s/run a patience window of 8 runs is
-    * only ~1.6 s of wall — the r12 gate saw a before-loop stop on a
-    * 15-run plateau at 219.9 ms whose true floor was ~165 (1.33x
-    * spread), while the same sweep's other loop ran 32 runs (~6.5 s
-    * measured) and reached 173.8. The floor is measured over the
-    * PLATEAU (time since the last >tol improvement), not from the
-    * loop's start: a cum-from-start variant was tried first and the
-    * slow early descent runs ate its budget — a fork whose first runs
-    * sat at 300+ ms banked 6 s of "evidence" while still mid-descent
-    * and stopped at 266 ms. Requiring the floor candidate itself to
-    * survive ~5 s of measured re-runs gives background compilation the
-    * wall time the run count cannot guarantee; a drop found during the
-    * extension resets the window and earns a full one. Cumulative
-    * MEASURED time (the sum of returned durations) is used rather than
-    * wall-clock so the rule is deterministic under test; runs are
-    * back-to-back, so the two agree in production.
-    *
-    * Honest limit, measured across the r12 gate sweeps: the end-of-sweep
-    * loop benefits from 200+ s of whole-stack C2 work on shared Spark
-    * internals that no per-loop warm-up can replicate on a fresh fork,
-    * so the raw before/after pair can still spread past 1.2x on a quiet
-    * box (observed 1.15x/1.33x/1.57x under the cum-from-start rule).
-    * The artifact's GATING inputs are insensitive to this by
-    * construction: ref_query_ratio = min(before, after) over the
-    * windowed history median is dominated by the well-warmed after-loop
-    * (observed 0.90/1.04/1.02 on the same three sweeps), and
-    * slow_box_corroborated consumes that ratio, not the raw pair. The
-    * pair itself stays in the JSON as descent diagnostics.
-    *
-    * Defaults sized from the measured staircase: plateaus run ~5 runs
-    * wide (runs 9-13 sat at ~195 before the drop to 171), so patience=8
-    * spans one full plateau with margin; patience=4 stopped at 199 ms on
-    * a sweep whose end-state floor was 131 ms (1.52x — still enough to
-    * mask a real mid-sweep slowdown). Worst case = maxMeasuredMs (20 s)
-    * of measured time, paid twice per multi-minute sweep; observed
-    * descents spend 8-15 s.
-    */
-  private[graft] def warmedMinMs(once: () => Double,
-                                 tol: Double = 0.03,
-                                 patience: Int = 8,
-                                 maxRuns: Int = 200,
-                                 minPlateauMs: Double = 5000.0,
-                                 maxMeasuredMs: Double = 20000.0): WarmedMin = {
-    var best = once()
-    var cumMs = best
-    var runs = 1
-    var sincImprove = 0
-    var plateauMs = 0.0
-    // The overall bound is maxMeasuredMs (total measured time), with
-    // maxRuns as a generous backstop: a fixed low run cap and a fixed
-    // plateau floor are incompatible — on a box whose warmed floor is
-    // 80 ms, a 5 s plateau needs 63 non-improving runs, so the old
-    // maxRuns=60 ALWAYS bound first and the stop rule silently degraded
-    // to "run 60 times and warn". A time cap scales with run cost in
-    // both directions; 20 s is ~2x what the deepest observed descent
-    // (58 runs at ~200-350 ms) actually spent.
-    while (runs < maxRuns && cumMs < maxMeasuredMs &&
-           (sincImprove < patience || plateauMs < minPlateauMs)) {
-      val cur = once()
-      cumMs += cur
-      runs += 1
-      if (cur < best * (1 - tol)) { sincImprove = 0; plateauMs = 0.0 }
-      else { sincImprove += 1; plateauMs += cur }
-      if (cur < best) best = cur
-    }
-    // A simultaneously-satisfied plateau and bound reads as "plateau":
-    // the stop rule was met, the bound just happened to coincide.
-    val exit =
-      if (sincImprove >= patience && plateauMs >= minPlateauMs) "plateau"
-      else if (cumMs >= maxMeasuredMs) "maxMeasuredMs"
-      else "maxRuns"
-    WarmedMin(best, runs, exit, cumMs)
-  }
-
-  /** Warmed-min wall ms for the reference query (see [[warmedMinMs]]) —
-    * before/after are both asymptote-of-descent numbers, so their ratio
-    * reads host state, not JIT state.
-    *
-    * `thorough = false` (SPARK_GRAFT_ONLY subset probes) trades depth
-    * for wall: subset lines are excluded from the history baseline and
-    * their slow_box/corroboration verdicts are always null, so the full
-    * two-loop descent (up to 2 x 20 s) would buy a probe nothing but a
-    * stderr diagnostic — a short bounded min suffices there.
-    */
-  private[graft] def refQueryMs(spark: SparkSession, dir: String,
-                                thorough: Boolean = true): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      refQueryDf(spark, dir).collect()
-      (System.nanoTime() - t0) / 1e6
-    }
-    val w =
-      if (thorough) warmedMinMs(() => once())
-      else warmedMinMs(() => once(), patience = 4, maxRuns = 12,
-                       minPlateauMs = 0, maxMeasuredMs = 4000)
-    // diagnostic, not artifact: how deep the warm loop had to go. The
-    // exit tag makes the promised wariness signal recoverable from the
-    // log — exit=maxMeasuredMs/maxRuns means the descent never
-    // flattened and the number is still warm-up-inflated; exit=plateau
-    // means the stop rule was satisfied naturally.
-    System.err.println(f"[bench] ref query warmed min: ${w.ms}%.1f ms after " +
-      f"${w.runs} runs (exit=${w.exit}, measured=${w.measuredMs}%.0f ms)")
-    w.ms
-  }
-
-  /** Self-adjudicating corroboration of slow_box: slow_box trips when the
-    * isolated re-runs sit uniformly above their history medians — which
-    * happens for BOTH host slowdown and a code change that slows many
-    * queries. The pinned reference query (zero engine code on its path)
-    * splits the two: host slowdown (steal/thermal/bandwidth) moves it
-    * together with the real queries; an engine regression cannot move it.
-    * corroborated_slow_box = iso_over_median > 1.3 (slow_box's own
-    * threshold) AND the ref query's min(before, after) > 1.3x its
-    * history median. The SAME threshold on both axes, deliberately: an
-    * earlier draft used 1.5 on the ref axis, which left a 1.3-1.5 dead
-    * band where a genuine uniform host slowdown (e.g. 1.4x steal)
-    * tripped slow_box, moved the ref query to 1.4x, and still read
-    * "false" — which the docs teach the judge to read as an ENGINE
-    * regression. 1.3 leaves margin over quiet-sweep ref jitter
-    * (observed 0.79-1.15 across seven r12 gate sweeps). "null" when
-    * either side has no baseline. slow_box itself is unchanged — this
-    * boolean is additional, and false on a quiet sweep by construction
-    * (both ratios ~1).
-    */
-  private[graft] def slowBoxCorroborated(isoOverMedian: Double, refRatio: Double): String =
-    if (isoOverMedian < 0 || refRatio < 0) "null"
-    else (isoOverMedian > 1.3 && refRatio > 1.3).toString
 
   /** Noise-robust headline total: per query, min(in-sweep time,
     * isolated re-measure if one ran), summed. The raw sweep total swings
@@ -795,7 +569,6 @@ object Bench {
     val hostCores = osBean.getAvailableProcessors
     val loadBefore = osBean.getSystemLoadAverage // -1.0 when unsupported
     val psiBefore = (psiSomeAvg10("cpu"), psiSomeAvg10("memory"), psiSomeAvg10("io"))
-    val canaryBefore = cpuCanaryMs()
     val procCpuT0 = sunBean.map(_.getProcessCpuTime).getOrElse(-1L)
     // OOM-envelope check BEFORE any query runs: an undersized fork heap
     // does not fail fast, it thrashes and then cascades (round-10
@@ -843,31 +616,25 @@ object Bench {
     }
 
     // Optional subset filter (comma-separated exact names) for targeted
-    // scale probes; unset = the full judged surface, as the driver runs
-    // it. Parsed before the ref measurement so a probe's ref loops can
-    // run in the cheap bounded mode (see refQueryMs's thorough flag).
+    // scale probes; unset = the full judged surface, as the driver runs it.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
     val selected = Mains.selectQueries(only)
 
-    // Pinned reference query (frozen vanilla scan->shuffle->agg over a
-    // fixed synthetic fixture): measured after warm-up and again at the
-    // end next to the CPU canary. Engine-code regressions cannot move
-    // it; host slowdown moves it together with the real queries.
-    val refDir = java.nio.file.Files.createTempDirectory("graft_refq")
-    val refPath = refDir.resolve("ref.parquet").toString
-    writeRefFixture(spark, refPath)
-    val refBefore = refQueryMs(spark, refPath, thorough = only.isEmpty)
+    final case class QResult(secs: Double, cpuSecs: Double, error: Option[String])
 
-    final case class QResult(secs: Double, error: Option[String])
-
+    // One run: wall time stops before the listener bus is drained; CPU
+    // covers every stage the run completed, construction jobs included.
+    val stageLog = StageLog.attach(spark)
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QResult = {
+      stageLog.clear()
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable =>
           Some(Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.next().take(200))
         }
-      QResult((System.nanoTime() - t0) / 1e9, err)
+      val secs = (System.nanoTime() - t0) / 1e9
+      QResult(secs, StageLog.cpuSeconds(stageLog.drain(spark)), err)
     }
     // cacheBuild: whether the query registered construction-time cached
     // state with PipelineCache — persists OR RDD-layer checkpoint
@@ -890,7 +657,8 @@ object Bench {
       // min-of-2; skip the re-run for a failed query (same failure twice)
       val best = if (first.error.isEmpty) {
         val second = once(fn)
-        QResult(math.min(first.secs, second.secs), second.error)
+        QResult(math.min(first.secs, second.secs),
+                math.min(first.cpuSecs, second.cpuSecs), second.error)
       } else first
       cacheBuild(name) = graft.ops.PipelineCache.heldCount > 0
       storageAfter(name) = storageMb(spark)
@@ -944,19 +712,12 @@ object Bench {
       }
       reMeasured
     } else Seq.empty
-    // The LAST executed query's retained caches (the final isolated
-    // re-measure on the judged path, the final sweep query on a
-    // SPARK_GRAFT_ONLY subset run) would otherwise still be held while
-    // ref_query_ms_after / cpu_canary_ms_after measure — refBefore ran
-    // with nothing retained, and the before/after pair must be a
-    // like-for-like comparison on EVERY path.
-    graft.ops.PipelineCache.release()
-    spark.sharedState.cacheManager.clearCache()
-    System.gc()
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v.secs }
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, QResult(_, Some(e))) =>
+    val cpu = results.map { case (k, v) => "\"" + k + "\":" + v.cpuSecs }
+      .mkString("{", ",", "}")
+    val errs = results.collect { case (k, QResult(_, _, Some(e))) =>
       "\"" + k + "\":" + Mains.jsonString(e)
     }.mkString("{", ",", "}")
     val iso = isolated.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -967,6 +728,7 @@ object Bench {
         Double.box(storageAfter.getOrElse(k, -1.0)))
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.secs).sum else 0.0
+    val totalCpu = results.map(_._2.cpuSecs).sum
     // the noise-robust companion headline (see robustTotal): in-sweep
     // times with each isolated re-measure folded back in as a min
     val totalRobust =
@@ -1009,14 +771,6 @@ object Bench {
       else externalLoad
     val contended = contendedInput > math.max(2.0, 0.25 * hostCores)
     val psiAfter = (psiSomeAvg10("cpu"), psiSomeAvg10("memory"), psiSomeAvg10("io"))
-    val canaryAfter = cpuCanaryMs()
-    val refAfter = refQueryMs(spark, refPath, thorough = only.isEmpty)
-    try { // best-effort ref-fixture cleanup
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(refDir)) { st =>
-        st.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    } catch { case _: Exception => () }
     // slow_box: the complement of "contended" for slowdowns load average
     // cannot see (hypervisor steal, thermal, memory bandwidth — the
     // round-10 close measured a 33%-slower sweep at external_load=0).
@@ -1028,17 +782,8 @@ object Bench {
     // quiet, cold-cache) and falls back to its sweep median. Requires
     // >=3 re-measured queries with a trustworthy (>=0.15s) baseline.
     // Honest limit: a code change that slows MANY queries uniformly
-    // also trips this — the disambiguators are recorded alongside: the
-    // register-only CPU canary and PSI move with host slowdown, never
-    // with a code regression, and since round 11 the pinned REFERENCE
-    // query (frozen vanilla scan->shuffle->agg, zero engine code on its
-    // path) covers the case a register-only canary misses — a
-    // bandwidth/steal slowdown moves ref_query_ms and the real queries
-    // together, while an engine regression moves only the real queries.
-    // The ref signal is additionally folded into its own boolean
-    // (slow_box_corroborated, see slowBoxCorroborated) now that the
-    // warmed-up before/after measurement makes its ratio trustworthy;
-    // the raw inputs stay in the JSON for re-adjudication. Emitted
+    // also trips this; cpu_s, recorded alongside, tells the two apart
+    // unless the slowdown is per-CPU (see the object scaladoc). Emitted
     // as JSON null when there is no baseline to judge against (fresh
     // history, subset run).
     val isoRatios = isolated.flatMap { case (n, s) =>
@@ -1049,17 +794,9 @@ object Bench {
     val isoOverMedian =
       if (isoRatios.size >= 3) isoRatios(isoRatios.size / 2) else -1.0
     val slowBox = if (isoOverMedian < 0) "null" else (isoOverMedian > 1.3).toString
-    // ref-query ratio vs the recency-windowed history median: min of this
-    // sweep's warmed before/after (like-for-like with how the baseline
-    // lines were folded in) over the baseline, -1 when no prior line
-    // recorded the ref query under this config.
-    val refRatio =
-      if (baseline.refQueryMs > 0) math.min(refBefore, refAfter) / baseline.refQueryMs
-      else -1.0
-    val slowBoxCorr = slowBoxCorroborated(isoOverMedian, refRatio)
     // Locale.ROOT, not the f interpolator: %.2f under the DEFAULT locale
     // emits decimal commas on de_DE-style hosts — invalid JSON that
-    // historyMedians' Try then silently drops, emptying the baseline.
+    // historyBaseline's Try then silently drops, emptying the baseline.
     def r2(x: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
     // max heap too: a 100x sweep under the default 8g fork heap OOM'd
     // where the same sweep at 64g completes — without this field the
@@ -1067,15 +804,15 @@ object Bench {
     // the JVM sizing it ran under. cpus is recorded so history medians
     // can refuse to blend baselines across harness configurations, and
     // heap_guard records whether THIS sweep ran inside the OOM envelope.
-    val machine = s"""{"host_cores":$hostCores,"cpus":$cpusInt,"heap_max_gb":${r2(heapGbNow)},"heap_guard":"${if (guardMsg.isDefined) "undersized" else "ok"}","load_before":${r2(loadBefore)},"load_after":${r2(loadAfter)},"load_max":${r2(loadMax)},"proc_cpu_sec":${r2(procCpuSec)},"wall_sec":${r2(wallSec)},"proc_avg_cores":${r2(procAvgCores)},"external_load":${r2(externalLoad)},"external_load_max":${r2(externalLoadMax)},"external_cpu_max":${r2(externalCpuMax)},"cpu_canary_ms_before":${r2(canaryBefore)},"cpu_canary_ms_after":${r2(canaryAfter)},"ref_query_ms_before":${r2(refBefore)},"ref_query_ms_after":${r2(refAfter)},"ref_query_ratio":${r2(refRatio)},"psi_cpu":[${r2(psiBefore._1)},${r2(psiAfter._1)}],"psi_mem":[${r2(psiBefore._2)},${r2(psiAfter._2)}],"psi_io":[${r2(psiBefore._3)},${r2(psiAfter._3)}],"iso_over_median":${r2(isoOverMedian)}}"""
+    val machine = s"""{"host_cores":$hostCores,"cpus":$cpusInt,"heap_max_gb":${r2(heapGbNow)},"heap_guard":"${if (guardMsg.isDefined) "undersized" else "ok"}","load_before":${r2(loadBefore)},"load_after":${r2(loadAfter)},"load_max":${r2(loadMax)},"proc_cpu_sec":${r2(procCpuSec)},"wall_sec":${r2(wallSec)},"proc_avg_cores":${r2(procAvgCores)},"external_load":${r2(externalLoad)},"external_load_max":${r2(externalLoadMax)},"external_cpu_max":${r2(externalCpuMax)},"psi_cpu":[${r2(psiBefore._1)},${r2(psiAfter._1)}],"psi_mem":[${r2(psiBefore._2)},${r2(psiAfter._2)}],"psi_io":[${r2(psiBefore._3)},${r2(psiAfter._3)}],"iso_over_median":${r2(isoOverMedian)}}"""
 
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_robust":$totalRobust,"queries":$qs,"errors":$errs,"isolated":$iso,"cache_build":$cb,"storage_mb":$smb,"failed":$failed,"runs":2,"contended":$contended,"slow_box":$slowBox,"slow_box_corroborated":$slowBoxCorr,"machine":$machine,"sf":${Mains.jsonString(sfDir)}}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_robust":$totalRobust,"total_cpu_s":$totalCpu,"queries":$qs,"cpu_s":$cpu,"errors":$errs,"isolated":$iso,"cache_build":$cb,"storage_mb":$smb,"failed":$failed,"runs":2,"contended":$contended,"slow_box":$slowBox,"machine":$machine,"sf":${Mains.jsonString(sfDir)}}"""
     println(fullLine)
     // Short trailer AFTER the full line: capture tools that keep only the
     // tail of the output can truncate the per-query map away, so the
     // headline numbers AND the contention verdicts are re-emitted in a
     // line that always fits.
-    println(s"""{"metric":"total_only","value":$total,"unit":"sec","total_robust":$totalRobust,"n_queries":${results.size},"failed":$failed,"contended":$contended,"slow_box":$slowBox,"slow_box_corroborated":$slowBoxCorr,"machine":$machine}""")
+    println(s"""{"metric":"total_only","value":$total,"unit":"sec","total_robust":$totalRobust,"total_cpu_s":$totalCpu,"n_queries":${results.size},"failed":$failed,"contended":$contended,"slow_box":$slowBox,"machine":$machine}""")
     // Durable copy: three rounds of driver artifacts (r06-r08) lost the
     // per-query map to stdout tail truncation. Write the complete JSON to
     // a repo file so the artifact is self-contained regardless of how much

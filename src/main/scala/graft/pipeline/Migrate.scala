@@ -152,8 +152,6 @@ final case class MigrateConfig(
     tokenFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column = Tokens.tokenOracle,
     ringMin: Long = Tokens.OracleRingMin,
     ringMax: Long = Tokens.OracleRingMax,
-    // test hook: ranges whose processing throws (simulates executor death)
-    failRanges: Set[Long] = Set.empty,
     // binding overrides; defaults derive parquet bindings from the paths
     source: Option[MigrateSource] = None,
     sink: Option[MigrateSink] = None,
@@ -187,9 +185,6 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
   private def migrate(todo: Seq[CheckpointRange]): Seq[Long] = {
     if (todo.isEmpty) return Seq.empty
     val todoIds = todo.map(_.range_id)
-
-    if (cfg.failRanges.intersect(todoIds.toSet).nonEmpty)
-      throw new RuntimeException(s"induced failure for ranges ${cfg.failRanges}")
 
     val renamed = cfg.renames.foldLeft(
       Sanitize.sanitize(tokenized(), cfg.policy)) { case (df, (from, to)) =>

@@ -2,17 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the two round-11 bench safeguards:
-  *
-  *  - heapGuard: the OOM-envelope check that warns BEFORE a sweep runs
-  *    on an undersized fork heap (the round-10 100x sweep OOM'd at a 5x
-  *    heap/fixture ratio and cascaded 111 killed queries).
-  *  - the pinned reference query: a frozen vanilla scan->shuffle->agg
-  *    whose timing disambiguates slow_box — engine regressions cannot
-  *    move it (no graft code on its path), host slowdown moves it with
-  *    the real queries. The pin locks the result values (deterministic
-  *    fixture) and the plan shape (scan + exchange + aggregate, and no
-  *    graft expression anywhere).
+/** Pins Bench's pure safeguards: the OOM-envelope heapGuard that warns
+  * BEFORE a sweep runs on an undersized fork heap (the round-10 100x
+  * sweep OOM'd at a 5x heap/fixture ratio and cascaded 111 killed
+  * queries), the contention verdict's inputs, the isolated re-measure
+  * selection and the total_robust fold-in.
   */
 class BenchGuardsSpec extends AnyFunSuite {
 
@@ -96,89 +90,6 @@ class BenchGuardsSpec extends AnyFunSuite {
       s"the load form must not difference across a stall, got $extLoad4")
   }
 
-  test("warmedMinMs: rides through staircase plateaus, stops at the floor, bounded") {
-    def feed(xs: Double*): () => Double = {
-      val it = Iterator(xs: _*) ++ Iterator.continually(xs.last)
-      () => it.next()
-    }
-    // An already-warm JVM: flat series stops after 1 + patience runs and
-    // returns the floor. (Pinned with explicit patience and the time
-    // floor disabled so the trace stays valid if defaults are retuned;
-    // separate asserts pin the defaults themselves.)
-    val flat = Bench.warmedMinMs(feed(100.0), patience = 4, minPlateauMs = 0)
-    assert((flat.ms, flat.runs, flat.exit) === ((100.0, 5, "plateau")))
-    // The measured descent shape (PLANS.md, "Round 12: bench
-    // self-adjudication hardening", item 2): a multi-run PLATEAU at
-    // 2x the asymptote must NOT stop the loop — the later tier drop
-    // resets patience and the returned min is the post-drop floor, not
-    // the plateau. (Consecutive-agreement, the first attempted rule,
-    // stopped on the 324/320 plateau.)
-    val stair = Bench.warmedMinMs(
-      feed(1603, 398, 324, 320, 319, 317, 250, 200, 197, 196, 195, 194),
-      tol = 0.05, patience = 4, minPlateauMs = 0)
-    assert(stair.ms === 194.0, "must ride through the 324..317 plateau to the floor")
-    assert(stair.runs === 12)
-    assert(stair.exit === "plateau")
-    // Plateau-time floor: the descent is TIME-driven (C2 background
-    // compile threads), so patience alone under-waits when runs are
-    // fast — the r12 gate saw a before-loop stop on a 15-run plateau at
-    // 219.9 ms whose floor was ~165. The floor is measured over the
-    // PLATEAU (time since the last >tol improvement), never from the
-    // loop's start — slow descent runs must not bank "evidence". A flat
-    // 100 ms series with a 1000 ms plateau floor: runs 2..11 each add
-    // 100 ms of plateau, stop at run 11.
-    val floored = Bench.warmedMinMs(feed(100.0), patience = 2, minPlateauMs = 1000)
-    assert((floored.ms, floored.runs, floored.exit) === ((100.0, 11, "plateau")))
-    // measuredMs is the cumulative measured time: 11 runs at 100 ms
-    assert(floored.measuredMs === 1100.0)
-    // A drop found DURING the floor extension resets the window and
-    // earns a FULL one: 2x300 of plateau (600 ms, under the floor), the
-    // run-4 drop to 100 zeroes it, then ten 100s rebuild 1000 ms.
-    val reset = Bench.warmedMinMs(feed(300, 300, 300, 100), patience = 2,
-      minPlateauMs = 1000)
-    assert((reset.ms, reset.runs, reset.exit) === ((100.0, 14, "plateau")))
-    // The overall bound is TOTAL MEASURED TIME, so an unreachable
-    // plateau floor cannot run away: a fixed low run cap was the wrong
-    // bound (on an 80 ms-floor box a 5 s plateau needs 63 non-improving
-    // runs — the old maxRuns=60 ALWAYS clipped first and the stop rule
-    // silently degraded to "run 60 times"). Flat 1000 ms series with an
-    // unreachable floor: 5 runs accumulate the 5000 ms cap and stop.
-    val clipped = Bench.warmedMinMs(feed(1000.0), patience = 1,
-      minPlateauMs = 1e9, maxMeasuredMs = 5000, maxRuns = 100)
-    assert((clipped.ms, clipped.runs) === ((1000.0, 5)))
-    // a bound clip is no longer indistinguishable from a natural stop:
-    // the exit tag names which bound fired, and measuredMs shows the
-    // budget it spent (the wariness signal the diagnostic line promises)
-    assert(clipped.exit === "maxMeasuredMs")
-    assert(clipped.measuredMs === 5000.0)
-    // and the default plateau floor IS reachable inside the default
-    // bounds on a fast box: 80 ms floor -> 63 plateau runs, well under
-    // maxRuns=200 and 20 s measured
-    val fast = Bench.warmedMinMs(feed(80.0), patience = 8)
-    assert(fast.ms === 80.0)
-    assert(fast.runs < 200 && fast.runs * 80.0 < 20000,
-      s"fast-box descent must exit via the plateau rule, not a bound clip (runs=${fast.runs})")
-    assert(fast.exit === "plateau")
-    // Default patience must span the measured ~5-run plateau width with
-    // margin (patience=4 left a 1.52x before/after spread on a real
-    // sweep): a 5-run plateau followed by a drop must be ridden through
-    // under the DEFAULTS.
-    assert(Bench.warmedMinMs(
-      feed(300, 200, 199, 198, 198, 197, 197, 150)).ms === 150.0,
-      "defaults must ride through a 5-run plateau")
-    // A never-converging series is BOUNDED at maxRuns: the loop cannot
-    // hang a sweep on a thrashing box — and still returns the min seen.
-    var calls = 0
-    val descending = () => { calls += 1; 1000.0 * math.pow(0.9, calls) }
-    val bounded = Bench.warmedMinMs(descending, maxRuns = 8)
-    assert(bounded.runs === 8)
-    assert(calls === 8)
-    assert(bounded.ms === 1000.0 * math.pow(0.9, 8))
-    assert(bounded.exit === "maxRuns")
-    // the min is tracked even on runs that don't clear the tol threshold
-    assert(Bench.warmedMinMs(feed(100.0, 99.0, 98.0, 97.0, 96.5)).ms === 96.5)
-  }
-
   test("isolation candidates: top-5 plus every >2x-median query, UNCAPPED") {
     // VERDICT r13 #2: the former cap of 40 dropped six candidates from
     // the 100x sweep, leaving their inflated in-sweep times inside
@@ -229,63 +140,5 @@ class BenchGuardsSpec extends AnyFunSuite {
     assert(Bench.robustTotal(quiet, Map("b" -> 2.0)) === 3.0)
     // empty sweep degenerates to 0, matching the raw total
     assert(Bench.robustTotal(Seq.empty, Map.empty) === 0.0)
-  }
-
-  test("slowBoxCorroborated: trips only when the zero-engine-code ref query slowed too") {
-    // quiet sweep: both ratios ~1 -> false (no behavior change when calm)
-    assert(Bench.slowBoxCorroborated(isoOverMedian = 1.0, refRatio = 1.0) === "false")
-    // host slowdown: real queries AND the frozen ref query elevated -> true
-    assert(Bench.slowBoxCorroborated(1.5, 1.8) === "true")
-    // engine regression: real queries slowed, ref query (no graft code on
-    // its path) did not -> NOT corroborated as a box problem
-    assert(Bench.slowBoxCorroborated(1.5, 1.0) === "false")
-    // ref elevated but real queries fine (e.g. one noisy ref sample):
-    // slow_box's own threshold not met -> false
-    assert(Bench.slowBoxCorroborated(1.0, 2.0) === "false")
-    // either baseline missing -> null, never a fabricated verdict
-    assert(Bench.slowBoxCorroborated(-1.0, 1.8) === "null")
-    assert(Bench.slowBoxCorroborated(1.5, -1.0) === "null")
-    // SAME 1.3 threshold on both axes: an asymmetric 1.5 ref threshold
-    // left a 1.3-1.5 dead band where a genuine 1.4x uniform host
-    // slowdown tripped slow_box, moved the zero-engine-code ref query
-    // to 1.4x, and still read "false" — the code-regression signature.
-    assert(Bench.slowBoxCorroborated(1.4, 1.4) === "true")
-    // boundary semantics match slow_box: strictly-greater on both axes
-    assert(Bench.slowBoxCorroborated(1.3, 1.8) === "false")
-    assert(Bench.slowBoxCorroborated(1.5, 1.3) === "false")
-  }
-
-  test("reference query: deterministic result, scan->shuffle->agg plan, zero engine code") {
-    val spark = SparkTestBase.spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_refq_spec")
-    val path = dir.resolve("ref.parquet").toString
-    try {
-      Bench.writeRefFixture(spark, path)
-      val df = Bench.refQueryDf(spark, path)
-      val row = df.collect().head
-      // the fixture is pure arithmetic over range(400000): pin exact values
-      var expTv = 0L
-      var id = 0L
-      while (id < 400000L) { expTv += (id * 2654435761L) % 1000003L; id += 1 }
-      assert(row.getAs[Long]("tv") === expTv)
-      assert(row.getAs[Long]("tn") === 400000L)
-      assert(row.getAs[Long]("groups") === 4096L)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Scan parquet"), s"must read through the parquet scan:\n$plan")
-      assert(plan.contains("Exchange"), s"must exercise the shuffle machinery:\n$plan")
-      assert(plan.contains("HashAggregate"), s"must exercise aggregation:\n$plan")
-      // frozen = vanilla: none of the engine's registered expressions may
-      // appear, otherwise a graft regression could move the reference
-      for (fn <- Seq("minhash", "shingle", "qcosine", "hyperplane", "cassandra_token"))
-        assert(!plan.toLowerCase.contains(fn), s"engine expression $fn leaked into the ref plan")
-      // and the timing harness returns a sane positive warmed min
-      val ms = Bench.refQueryMs(spark, path)
-      assert(ms > 0.0 && ms < 60000.0)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(dir)) { s =>
-        s.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
   }
 }

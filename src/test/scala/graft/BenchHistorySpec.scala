@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins Bench.historyMedians, the parser the bench artifact's isolated
+/** Pins Bench.historyBaseline, the parser the bench artifact's isolated
   * re-measure selection and slow_box verdict both stand on. The judged
   * artifact self-adjudicates contention with these medians, so the
   * filtering rules — subset probes excluded, other-sf sweeps excluded,
@@ -46,9 +46,13 @@ class BenchHistorySpec extends AnyFunSuite {
     withHistory(Seq(
       line("/data/sfX", Map("a" -> 1.0, "b" -> 2.0), Map("a" -> 0.9)),
       line("/data/sfX", Map("a" -> 3.0), Map("a" -> 1.1)),
-      line("/data/sfX", Map("a" -> 2.0), Map("a" -> 1.0))
+      // an older line carrying fields the writer no longer emits still
+      // admits: unknown fields are ignored
+      line("/data/sfX", Map("a" -> 2.0), Map("a" -> 1.0),
+        machine = """{"cpu_canary_ms_before":80.0,"ref_query_ms_before":160.0,"ref_query_ratio":1.0}""",
+        verdicts = """"slow_box":false,"slow_box_corroborated":false""")
     )) { hist =>
-      val (sweep, iso) = Bench.historyMedians(hist, "/data/sfX")
+      val Bench.HistoryBaseline(sweep, iso) = Bench.historyBaseline(hist, "/data/sfX")
       assert(sweep("a") === 2.0) // median of 1,2,3
       assert(sweep("b") === 2.0)
       assert(iso("a") === 1.0) // median of 0.9,1.0,1.1
@@ -64,7 +68,7 @@ class BenchHistorySpec extends AnyFunSuite {
       "this is not json",
       """{"queries":"not-a-map","sf":"/data/sfX"}"""
     )) { hist =>
-      val (sweep, iso) = Bench.historyMedians(hist, "/data/sfX")
+      val Bench.HistoryBaseline(sweep, iso) = Bench.historyBaseline(hist, "/data/sfX")
       assert(sweep === Map("a" -> 1.0))
       assert(iso.isEmpty)
     }
@@ -76,7 +80,7 @@ class BenchHistorySpec extends AnyFunSuite {
       // an OOM-cascade sweep: b died in 8ms and is listed in errors
       line("/data/sfX", Map("a" -> 2.2, "b" -> 0.008), errors = Set("b"))
     )) { hist =>
-      val (sweep, _) = Bench.historyMedians(hist, "/data/sfX")
+      val sweep = Bench.historyBaseline(hist, "/data/sfX").sweep
       assert(sweep("a") === 2.2) // both samples counted
       assert(sweep("b") === 3.0) // only the honest one
     }
@@ -92,10 +96,10 @@ class BenchHistorySpec extends AnyFunSuite {
         line(real.toString, Map("a" -> 3.0))
       )) { hist =>
         // queried via the real path, both lines must contribute
-        val (viaReal, _) = Bench.historyMedians(hist, real.toString)
+        val viaReal = Bench.historyBaseline(hist, real.toString).sweep
         assert(viaReal("a") === 3.0) // median of [1,3] takes the upper
         // and via the symlink, identically
-        val (viaLink, _) = Bench.historyMedians(hist, link.toString)
+        val viaLink = Bench.historyBaseline(hist, link.toString).sweep
         assert(viaLink === viaReal)
       }
     } finally {
@@ -112,7 +116,7 @@ class BenchHistorySpec extends AnyFunSuite {
       // line silently entered the baseline
       """{"ts":"t","metric":"total","value":1.0,"queries":{"a":1.0,"b":null},"isolated":{},"errors":{},"sf":"/data/sfX"}"""
     )) { hist =>
-      val (sweep, _) = Bench.historyMedians(hist, "/data/sfX")
+      val sweep = Bench.historyBaseline(hist, "/data/sfX").sweep
       assert(sweep === Map("a" -> 5.0), "the half-parsed line must contribute nothing")
     }
   }
@@ -135,11 +139,11 @@ class BenchHistorySpec extends AnyFunSuite {
       // heap is mismatched anyway
       line("/data/sfX", Map("a" -> 89.0), machine = """{"heap_max_gb":89.0}""")
     )) { hist =>
-      val (sweep, _) = Bench.historyMedians(hist, "/data/sfX", cpus = 32, heapGb = 64.0)
+      val sweep = Bench.historyBaseline(hist, "/data/sfX", cpus = 32, heapGb = 64.0).sweep
       assert(sweep("a") === 2.0,
         "upper median of [1.0, 2.0] — mismatched, legacy AND partial lines all excluded")
       // and with no current config declared, everything still counts
-      val (all, _) = Bench.historyMedians(hist, "/data/sfX")
+      val all = Bench.historyBaseline(hist, "/data/sfX").sweep
       // config-agnostic admits all six; the default recency window keeps
       // the newest 5 (drops the oldest, 1.0) -> upper median of
       // [2,3,40,50,89] = 40
@@ -153,7 +157,7 @@ class BenchHistorySpec extends AnyFunSuite {
       line("/data/sfX", Map("a" -> 1.0)),
       line("/data/sfX", Map("a" -> 2.0), machine = """{"cpus":32}""")
     )) { hist =>
-      val (sweep, iso) = Bench.historyMedians(hist, "/data/sfX", cpus = 32, heapGb = 64.0)
+      val Bench.HistoryBaseline(sweep, iso) = Bench.historyBaseline(hist, "/data/sfX", cpus = 32, heapGb = 64.0)
       assert(sweep.isEmpty && iso.isEmpty,
         "legacy/partial-only history must not fabricate a config-gated baseline")
     }
@@ -176,7 +180,7 @@ class BenchHistorySpec extends AnyFunSuite {
     val contendedL = line("/data/sfX", Map("a" -> 9.0), Map("a" -> 9.0),
       verdicts = """"contended":true,"slow_box":false""")
     withHistory(quiet ++ regressed :+ contendedL) { hist =>
-      val (sweep, iso) = Bench.historyMedians(hist, "/data/sfX")
+      val Bench.HistoryBaseline(sweep, iso) = Bench.historyBaseline(hist, "/data/sfX")
       // even though the 5 newest-but-one lines all read 2.0 (enough to
       // fill the recency window) and the newest reads 9.0, the baseline
       // still reads the quiet regime
@@ -189,7 +193,7 @@ class BenchHistorySpec extends AnyFunSuite {
       line("/data/sfX", Map("a" -> 3.0)),
       line("/data/sfX", Map("a" -> 3.0), verdicts = """"contended":false,"slow_box":null""")
     )) { hist =>
-      val (sweep, _) = Bench.historyMedians(hist, "/data/sfX")
+      val sweep = Bench.historyBaseline(hist, "/data/sfX").sweep
       assert(sweep("a") === 3.0)
     }
   }
@@ -201,7 +205,7 @@ class BenchHistorySpec extends AnyFunSuite {
     val old = (1 to 10).map(_ => line("/data/sfX", Map("a" -> 10.0)))
     val recent = (1 to 5).map(_ => line("/data/sfX", Map("a" -> 1.0)))
     withHistory(old ++ recent) { hist =>
-      val (sweep, _) = Bench.historyMedians(hist, "/data/sfX")
+      val sweep = Bench.historyBaseline(hist, "/data/sfX").sweep
       assert(sweep("a") === 1.0, "the default window must see only the newest lines")
       // window <= 0 disables: the blended median reads the stale majority
       val all = Bench.historyBaseline(hist, "/data/sfX", window = 0)
@@ -210,34 +214,6 @@ class BenchHistorySpec extends AnyFunSuite {
       // newest 8 = five 1.0s + three 10.0s -> median still 1.0
       val w8 = Bench.historyBaseline(hist, "/data/sfX", window = 8)
       assert(w8.sweep("a") === 1.0)
-    }
-  }
-
-  test("reference-query baseline: min(before,after) per line, windowed, config-gated") {
-    def m(cpus: Int, before: Double, after: Double): String =
-      s"""{"cpus":$cpus,"heap_max_gb":64.0,"ref_query_ms_before":$before,"ref_query_ms_after":$after}"""
-    withHistory(Seq(
-      line("/data/sfX", Map("a" -> 1.0), machine = m(32, 260.0, 150.0)),
-      line("/data/sfX", Map("a" -> 1.0), machine = m(32, 160.0, 170.0)),
-      // a different harness config must not blend into the ref baseline
-      line("/data/sfX", Map("a" -> 1.0), machine = m(4, 900.0, 900.0)),
-      // pre-r11 line without machine config: excluded whole under the
-      // declared config (r14 full-match rule); admitted config-agnostic
-      line("/data/sfX", Map("a" -> 1.0)),
-      // a sentinel -1 (unsupported measurement) must be skipped, not
-      // ingested as a tiny "fast" baseline
-      line("/data/sfX", Map("a" -> 1.0), machine = m(32, -1.0, -1.0))
-    )) { hist =>
-      val b = Bench.historyBaseline(hist, "/data/sfX", cpus = 32, heapGb = 64.0)
-      // per-line mins are [150, 160]; upper median = 160
-      assert(b.refQueryMs === 160.0)
-      // config-agnostic blends the 4-cpu line: [150, 160, 900] -> 160
-      val all = Bench.historyBaseline(hist, "/data/sfX")
-      assert(all.refQueryMs === 160.0)
-    }
-    // history with no ref fields anywhere -> -1, never a fake baseline
-    withHistory(Seq(line("/data/sfX", Map("a" -> 1.0)))) { hist =>
-      assert(Bench.historyBaseline(hist, "/data/sfX").refQueryMs === -1.0)
     }
   }
 
@@ -283,7 +259,7 @@ class BenchHistorySpec extends AnyFunSuite {
   }
 
   test("unreadable history yields empty maps (fresh clone)") {
-    val (sweep, iso) = Bench.historyMedians(
+    val Bench.HistoryBaseline(sweep, iso) = Bench.historyBaseline(
       java.nio.file.Paths.get("/nonexistent/bench_history.jsonl"), "/data/sfX")
     assert(sweep.isEmpty && iso.isEmpty)
   }

@@ -92,7 +92,8 @@ class JdbcMigrateSpec extends AnyFunSuite {
 
   test("crash-resume: induced failure leaves checkpoints incomplete; resume completes to OK") {
     val (url, cfg) = freshBinding()
-    intercept[RuntimeException] { new Migrate(spark, cfg.copy(failRanges = Set(2L))).runOnce() }
+    val failing = cfg.copy(sink = cfg.sink.map(FailingSink(_, Set(2L))))
+    intercept[RuntimeException] { new Migrate(spark, failing).runOnce() }
     assert(queryLong(url,
       "SELECT COUNT(*) FROM \"migration_checkpoint\" WHERE \"checkpoint\" < \"range_end\"") == 4L)
     val m2 = new Migrate(spark, cfg)

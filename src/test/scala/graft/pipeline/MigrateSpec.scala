@@ -15,7 +15,7 @@ import graft.core.Sanitize
 class MigrateSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  private def freshCfg(failRanges: Set[Long] = Set.empty): MigrateConfig = {
+  private def freshCfg(): MigrateConfig = {
     val dir = Files.createTempDirectory("graft_migrate").toString
     MigrateConfig(
       srcPath = s"${SparkTestBase.Sf0001}/lineitem.parquet",
@@ -23,8 +23,7 @@ class MigrateSpec extends AnyFunSuite {
       numRanges = 8,
       sinkPath = s"$dir/sink",
       checkpointPath = s"$dir/checkpoints",
-      renames = Map("l_orderkey" -> "file_id"),
-      failRanges = failRanges)
+      renames = Map("l_orderkey" -> "file_id"))
   }
 
   test("full run migrates every row exactly once and validates OK") {
@@ -41,14 +40,14 @@ class MigrateSpec extends AnyFunSuite {
   }
 
   test("crash before any range completes leaves all checkpoints incomplete; re-run resumes to OK") {
-    val cfg = freshCfg(failRanges = Set(3L))
-    val m = new Migrate(spark, cfg)
+    val cfg = freshCfg()
+    val m = new Migrate(spark, cfg.copy(sink = Some(FailingSink(ParquetSink(cfg.sinkPath), Set(3L)))))
     intercept[RuntimeException] { m.runOnce() }
     assert(m.validate().dst_count == 0L) // a never-written sink reads as empty
     val cps = new Checkpoints(spark, cfg.checkpointPath)
     assert(cps.fetchIncomplete().size == cfg.numRanges) // nothing marked complete
     // resume without the induced failure
-    val m2 = new Migrate(spark, cfg.copy(failRanges = Set.empty))
+    val m2 = new Migrate(spark, cfg)
     m2.run()
     assert(!m2.checkpointsIncomplete())
     assert(m2.validate().status == "OK")

@@ -6,7 +6,7 @@
 #   1. full ScalaTest suite
 #   2. oracle gate: Verify + DuckDB compare at sf0.01
 #   3. judged-scale bench sweep (sf0.1, local[32]) — run on a QUIET box;
-#      the artifact's contended/slow_box/ref_query fields adjudicate
+#      the artifact's contended/slow_box fields and per-query cpu_s adjudicate
 #   4. monster-curve exponent gate (3-point size sweep, --warn 1.3)
 #   5. stage + commit every artifact the round produced (bench_out/*,
 #      LEAKCHECK/COPYCHECK, any BENCH_r*/CORRECTNESS_r* the driver has
