@@ -15,6 +15,18 @@ import graft.functions.{CassandraToken, HyperplaneBucket, HyperplaneSig32, Hyper
   * SQL surface:
   *   cassandra_token(key) — exact Cassandra Murmur3 partitioner token
   *     of a bigint/text/binary partition key (reference F1).
+  *
+  * Engine rules:
+  *   - as-of join planning (`AsOfStrategy`) and its filter pushdown
+  *     (`PushFilterThroughAsOfJoin`);
+  *   - [[graft.functions.UseExactPercentile]] (optimizer): exact
+  *     `percentile` with frequency 1, ascending and numeric input runs on
+  *     the primitive-run buffer of [[graft.functions.ExactPercentile]];
+  *   - [[graft.plans.SmallSortOnePartition]] (AQE query-stage
+  *     preparation): a global sort whose estimated output, bounded by
+  *     materialized stages' row counts, fits `coalescePartitions.minPartitionSize`
+  *     and whose measured input stages fit `advisoryPartitionSizeInBytes`
+  *     shuffles into one partition, with no range-sample job.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -22,6 +34,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // custom-operator surface: as-of join planning + its pushdown rule
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
     e.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOfJoin)
+    e.injectOptimizerRule(_ => graft.functions.UseExactPercentile)
+    e.injectQueryStagePrepRule(_ => graft.plans.SmallSortOnePartition)
   }
 }
 

@@ -2,6 +2,7 @@ package graft.obs
 
 import scala.collection.mutable
 
+import org.apache.spark.GraftAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -17,6 +18,12 @@ final case class StageRow(id: Int, name: String, wallMs: Long,
 /** The one stage-metrics listener: records a [[StageRow]] per completed
   * stage. Callers bracket a unit of work with [[clear]] and [[drain]];
   * skipped stages never complete, so only stages that ran are recorded.
+  *
+  * A stage is named by the operation scopes of its RDDs, which for SQL are
+  * the physical operators it ran ("AQEShuffleRead > ObjectHashAggregate >
+  * Exchange"). The callsite (`si.name`) is the fallback: under AQE most
+  * stages' callsite is `$anonfun$withThreadLocalCaptured$2 at
+  * CompletableFuture.java`, which names no operator.
   */
 final class StageLog extends SparkListener {
   private val rows = mutable.ArrayBuffer.empty[StageRow]
@@ -25,7 +32,8 @@ final class StageLog extends SparkListener {
     val si = sc.stageInfo
     val m = si.taskMetrics
     if (m != null) rows.synchronized {
-      rows += StageRow(si.stageId, si.name,
+      val scopes = GraftAccess.scopeNames(si)
+      rows += StageRow(si.stageId, if (scopes.isEmpty) si.name else scopes.mkString(" > "),
         (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(-1L),
         m.executorRunTime, m.executorCpuTime, m.jvmGCTime, si.numTasks,
         m.inputMetrics.recordsRead,
@@ -57,18 +65,10 @@ object StageLog {
   def cpuSeconds(rows: Seq[StageRow]): Double = rows.map(_.cpuNs).sum / 1e9
 
   /** Block until the async listener bus is empty, so stage-completed
-    * events land in the window that ran them, not the next one.
-    * `listenerBus` is private[spark], so reach it reflectively; if the
-    * internals move in a future Spark, fall back to a fixed sleep.
+    * events land in the window that ran them, not the next one. A bus
+    * that does not empty within its timeout leaves the window as it is.
     */
   private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
-      val m = bus.getClass.getMethods
-        .filter(m => m.getName == "waitUntilEmpty" && m.getParameterCount <= 1)
-        .minBy(_.getParameterCount)
-      if (m.getParameterCount == 0) m.invoke(bus)
-      else m.invoke(bus, java.lang.Long.valueOf(30000L))
-    } catch { case _: Throwable => Thread.sleep(500) }
+    try GraftAccess.drainListenerBus(spark.sparkContext)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }

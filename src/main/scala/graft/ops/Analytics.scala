@@ -209,7 +209,11 @@ object Analytics {
     // single-pass mergeable answer; this query pins its error bound.
     // Array-valued percentages keep ONE exact buffer and ONE GK sketch
     // per group (same algorithm over the same buffer, so the values are
-    // the ones two scalar calls would give).
+    // the ones two scalar calls would give). The exact buffer is
+    // graft.functions.ExactPercentile (sorted primitive runs), which the
+    // UseExactPercentile optimizer rule plans for this `percentile` call;
+    // the final ORDER BY over three groups sorts in one partition
+    // (graft.plans.SmallSortOnePartition), with no range-sample job.
     "a18_approx_percentile_drift" -> Q(
       fn = (s, d) =>
         Tables.lineitem(s, d)

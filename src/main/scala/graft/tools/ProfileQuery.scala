@@ -5,7 +5,8 @@ import graft.obs.StageLog
 /** Per-STAGE profiler for any registered query: runs the query verbatim
   * and prints one line per completed stage — executor run time and CPU
   * time, GC, shuffle read/write bytes and records, input records, task
-  * count, and the stage's callsite name. It attributes cost inside the
+  * count, and the operators the stage ran (its RDD operation scopes, see
+  * [[graft.obs.StageLog]]). It attributes cost inside the
   * EXACT plan the benchmark runs, never a phase-by-phase replay (a replay
   * re-derives each phase and can diverge from the registered plan under
   * AQE: in the r15 a26 profile the replayed baskets phase alone cost
@@ -17,7 +18,8 @@ import graft.obs.StageLog
   * queries skips the very aggregates the full output pays for.
   *
   * `cpuTotal` sums executor CPU time; `run=` is task wall time, which
-  * also counts time a task waited for a core.
+  * also counts time a task waited for a core. Shuffle and spill print in
+  * KB, so a KB-sized aggregate shuffle (a10's) does not read as 0.
   *
   *   sbt "runMain graft.tools.ProfileQuery a26_market_basket /tmp/sf10 [reps]"
   */
@@ -42,13 +44,13 @@ object ProfileQuery {
       val rows = log.drain(spark).sortBy(-_.runMs)
       println(f"== $qname rep $rep: wall=$wall%.1fs rows=$n " +
         f"cpuTotal=${StageLog.cpuSeconds(rows)}%.1fs " +
-        f"shufTotal=${rows.map(_.shufWrite).sum / 1e9}%.2fGB ==")
+        f"shufTotal=${rows.map(_.shufWrite).sum / 1e3}%.1fKB ==")
       rows.foreach { r =>
         println(f"STAGE ${r.id}%4d run=${r.runMs / 1000.0}%8.1fs cpu=${r.cpuNs / 1e9}%8.1fs " +
           f"wall=${r.wallMs / 1000.0}%6.1fs " +
           f"gc=${r.gcMs / 1000.0}%5.1fs tasks=${r.tasks}%4d in=${r.inRec}%-11d " +
-          f"sR=${r.shufRead / 1e9}%5.2fGB/${r.shufReadRec}%-11d sW=${r.shufWrite / 1e9}%5.2fGB/${r.shufWriteRec}%-11d " +
-          f"spill=${(r.spillMem + r.spillDisk) / 1e9}%5.2fGB  ${r.name.take(120)}")
+          f"sR=${r.shufRead / 1e3}%10.1fKB/${r.shufReadRec}%-11d sW=${r.shufWrite / 1e3}%10.1fKB/${r.shufWriteRec}%-11d " +
+          f"spill=${(r.spillMem + r.spillDisk) / 1e3}%10.1fKB  ${r.name.take(120)}")
       }
     }
     spark.stop()

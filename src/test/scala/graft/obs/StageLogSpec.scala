@@ -7,7 +7,8 @@ import graft.SparkTestBase
 
 /** Pins the one stage-metrics listener that Bench's cpu_s and
   * ProfileQuery's per-stage lines read: a window drained after its jobs
-  * holds their stages and executor CPU, and an idle window holds none.
+  * holds their stages, named by their operators, and executor CPU, and
+  * an idle window holds none.
   */
 class StageLogSpec extends AnyFunSuite {
 
@@ -22,6 +23,11 @@ class StageLogSpec extends AnyFunSuite {
       assert(rows.nonEmpty, "the aggregate's stages must be in once the bus is drained")
       assert(rows.map(_.tasks).sum >= 4)
       assert(StageLog.cpuSeconds(rows) > 0.0)
+      // named by the operators that ran, not by the AQE callsite
+      assert(rows.forall(r => !r.name.contains("CompletableFuture") && !r.name.contains(".java:")),
+        rows.map(_.name).mkString("; "))
+      assert(rows.exists(_.name.contains("Exchange")), rows.map(_.name).mkString("; "))
+      assert(rows.exists(_.name.contains("AQEShuffleRead")), rows.map(_.name).mkString("; "))
 
       log.clear()
       val idle = log.drain(spark)

@@ -508,7 +508,17 @@ class PlanQualitySpec extends AnyFunSuite {
     val plan = executedPlan("d24_oov_ratio").split("== Initial Plan ==").head
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-500 vocab must be per-partition heaps, not a global rank window:\n$plan")
-    assert(!plan.contains("Exchange SinglePartition"),
+    // The root ORDER BY doc_id sorts d24's few output rows, and with AQE
+    // graft.plans.SmallSortOnePartition may give it one partition: the
+    // exchange directly under the first `Sort [doc_id ...], true` (past its
+    // query stage and shuffle read) is exempt, and no other.
+    val lines = plan.linesIterator.toVector
+    val rootSort = lines.indexWhere(l => l.contains("Sort [doc_id#") && l.contains("], true,"),
+      lines.indexWhere(_.contains("== Final Plan ==")))
+    val rootExchange = lines.indexWhere(l =>
+      !l.contains("ShuffleQueryStage") && !l.contains("AQEShuffleRead"), rootSort + 1)
+    val rest = lines.indices.filterNot(i => rootSort >= 0 && i == rootExchange).map(lines)
+    assert(!rest.exists(_.contains("Exchange SinglePartition")),
       s"no stage may collapse the vocabulary into one partition:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       s"the 500-word vocab must broadcast into the scoring join:\n$plan")
