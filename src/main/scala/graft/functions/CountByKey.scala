@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions.udaf
 
 /** Mergeable per-key row counter, used as an `observe()` metric so the
   * migration write job reports per-range written counts WITHOUT a second
-  * source scan (T5 verification; see Migrate.runOnce).
+  * source scan (T5 verification; see the private `Migrate.migrate`, which
+  * both `run` and `runOnce` call).
   *
   * Key cardinality is the number of token ranges (control-table sized,
   * ≤ a few thousand), so the map buffer stays tiny on every partition

@@ -123,18 +123,15 @@ class JdbcCheckpoints(
     try f(conn) finally conn.close()
   }
 
-  /** Create the table if absent (K5), then seed any missing ranges.
-    * The seed is (a) per-range idempotent — the dialect's insert-if-absent
+  /** Seed any missing ranges into the table `Ddl.ensureTables` created
+    * (K5 runs first; this store creates no table). The seed is (a)
+    * per-range idempotent — the dialect's insert-if-absent
     * keyed on range_id, so a partial seed from an earlier crash is
     * REPAIRED rather than silently skipped (a plain count==0 guard would
     * leave the unseeded ranges unmigrated forever) — and (b) wrapped in
     * one transaction so a crash mid-batch leaves no partial state at all.
     */
   def seedIfEmpty(ranges: Seq[TokenRange]): Unit = withConn { conn =>
-    if (!dialect.tableExists(conn, table)) {
-      val st = conn.createStatement()
-      try st.executeUpdate(dialect.createCheckpointTableSql(table)) finally st.close()
-    }
     val n = {
       val st = conn.createStatement()
       try {

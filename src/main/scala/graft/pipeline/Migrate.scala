@@ -7,6 +7,7 @@ import scala.concurrent.duration.DurationInt
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.{Sanitize, Tokens}
 import graft.core.Tokens.TokenRange
@@ -164,6 +165,8 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
 
   private val ranges: Seq[TokenRange] =
     Tokens.split(cfg.numRanges, cfg.ringMin, cfg.ringMax)
+  private val bounds: Map[Long, (Long, Long)] =
+    ranges.map(r => r.rangeId.toLong -> (r.start, r.end)).toMap
   private val source: MigrateSource = cfg.source.getOrElse(ParquetSource(cfg.srcPath))
   private val sink: MigrateSink = cfg.sink.getOrElse(ParquetSink(cfg.sinkPath))
   private val checkpoints: CheckpointStore =
@@ -182,10 +185,25 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
     migrate(checkpoints.fetchIncomplete())
   }
 
+  /** A checkpoint table seeded by a different split would have its
+    * foreign ranges filtered to nothing by the range predicate and then
+    * marked complete with no row written, so refuse it before any write.
+    */
+  private def requireOwnSplit(todo: Seq[CheckpointRange]): Unit =
+    todo.find(r => !bounds.get(r.range_id).contains((r.range_start, r.range_end))).foreach { r =>
+      throw new IllegalStateException(
+        s"checkpoint range ${r.range_id} (${r.range_start}, ${r.range_end}] is not a range " +
+          s"of this ${cfg.numRanges}-range split; the checkpoint table was seeded by another " +
+          "split. Reset it (Ddl.truncateControlTables, or delete the parquet checkpoint path) " +
+          "to start over with this split.")
+    }
+
   private def migrate(todo: Seq[CheckpointRange]): Seq[Long] = {
     if (todo.isEmpty) return Seq.empty
+    requireOwnSplit(todo)
     val todoIds = todo.map(_.range_id)
 
+    // Migrate.sinkSchema derives the JDBC sink's columns from this projection
     val renamed = cfg.renames.foldLeft(
       Sanitize.sanitize(tokenized(), cfg.policy)) { case (df, (from, to)) =>
       df.withColumnRenamed(from, to)
@@ -247,7 +265,10 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
     checkpoints.fetchIncomplete().nonEmpty
   }
 
-  /** Global validation (T6): source count vs sink count, persisted row. */
+  /** Global validation (T6): source count vs sink count. The row is not
+    * persisted here; `MigrateMain` records it through
+    * `JdbcTarget.recordValidation` (K4).
+    */
   def validate(): ValidationRow = {
     val srcCount = source.read(spark).count()
     val dstCount = sink.totalCount(spark)
@@ -255,4 +276,14 @@ class Migrate(spark: SparkSession, cfg: MigrateConfig) {
     ValidationRow("migrated", srcCount, dstCount, diff,
       if (diff == 0) "OK" else "MISMATCH")
   }
+}
+
+object Migrate {
+
+  /** The columns `migrate` writes to a JDBC sink: the source's, renamed
+    * by `renames`, plus `range_id` (`token_key` is not written).
+    */
+  def sinkSchema(source: StructType, renames: Map[String, String]): StructType =
+    StructType(source.fields.map(f => f.copy(name = renames.getOrElse(f.name, f.name))) :+
+      StructField("range_id", LongType))
 }

@@ -15,11 +15,14 @@ import graft.functions.CassandraToken
   *     --sink /path/sink --checkpoints /path/cp \
   *     [--rename o_orderkey=file_id[,a=b...]] [--passes 3] \
   *     [--jdbc-url jdbc:... --jdbc-user u --jdbc-password p \
-  *      --jdbc-table t --jdbc-key-cols id --jdbc-wal migration_wal]
+  *      --jdbc-table t --jdbc-key-cols id]
   *
-  * With --jdbc-url the sink and checkpoint store bind to the database
-  * (JdbcTableSink + JdbcCheckpoints + K5 bootstrap); otherwise the
-  * parquet bindings are used. Exit code 0 iff validation says OK.
+  * With --jdbc-url, `JdbcTarget.bind` bootstraps the sink and control
+  * tables (K5) and binds the sink, with its WAL always on, and the
+  * checkpoint store to the database; the validation row is then
+  * recorded there (K4). Otherwise the parquet bindings are used. A flag
+  * the CLI does not read, or a flag without a value, fails before any
+  * table or Spark job is created. Exit code 0 iff validation says OK.
   *
   * With --cassandra-keyspace/--cassandra-table (and optionally
   *  --cassandra-host, default 127.0.0.1) the SOURCE binds to the
@@ -31,16 +34,60 @@ import graft.functions.CassandraToken
   */
 object MigrateMain {
 
+  private val Flags = Set(
+    "master", "shuffle-partitions", "src", "key", "ranges", "sink", "checkpoints",
+    "rename", "passes", "cassandra-keyspace", "cassandra-table", "cassandra-host",
+    "jdbc-url", "jdbc-user", "jdbc-password", "jdbc-table", "jdbc-key-cols")
+
   private def parseArgs(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+    args.grouped(2).map {
+      case Array(k, v) if k.startsWith("--") && Flags(k.drop(2)) => k.drop(2) -> v
+      case Array(k, _) => throw new IllegalArgumentException(s"unknown flag $k")
+      case Array(k) => throw new IllegalArgumentException(s"flag $k has no value")
     }.toMap
 
-  def main(args: Array[String]): Unit = {
+  /** Parse, bind, run and validate; the JDBC binding also records the
+    * validation row under the --jdbc-table name.
+    */
+  def run(spark: SparkSession, args: Array[String]): ValidationRow = {
     val a = parseArgs(args)
     def req(k: String): String =
       a.getOrElse(k, sys.error(s"missing required --$k"))
 
+    val cassandra = a.get("cassandra-keyspace").map { ks =>
+      CassandraSource(ks, req("cassandra-table"),
+        Map("spark.cassandra.connection.host" ->
+          a.getOrElse("cassandra-host", "127.0.0.1")))
+    }
+    val jdbc = a.get("jdbc-url").map { url =>
+      JdbcTarget(url, a.getOrElse("jdbc-user", ""), a.getOrElse("jdbc-password", ""),
+        req("jdbc-table"), req("jdbc-key-cols").split(',').toSeq)
+    }
+    val cfg = MigrateConfig(
+      srcPath = if (cassandra.isDefined) a.getOrElse("src", "") else req("src"),
+      keyCol = req("key"),
+      numRanges = a.getOrElse("ranges", "64").toInt,
+      sinkPath = a.getOrElse("sink", ""),
+      checkpointPath = a.getOrElse("checkpoints", ""),
+      renames = a.get("rename").map(_.split(',').map { kv =>
+        val Array(f, t) = kv.split('='); f -> t
+      }.toMap).getOrElse(Map.empty),
+      tokenFn = if (cassandra.isDefined) CassandraToken.cassandra_token
+                else Tokens.tokenOracle,
+      ringMin = if (cassandra.isDefined) Tokens.RingMin else Tokens.OracleRingMin,
+      ringMax = if (cassandra.isDefined) Tokens.RingMax else Tokens.OracleRingMax,
+      source = cassandra)
+    val passes = a.getOrElse("passes", "3").toInt
+
+    val m = new Migrate(spark, jdbc.fold(cfg)(_.bind(spark, cfg)))
+    m.run(passes)
+    val v = m.validate()
+    jdbc.foreach(_.recordValidation(v))
+    v
+  }
+
+  def main(args: Array[String]): Unit = {
+    val a = parseArgs(args)
     val spark = SparkSession.builder()
       .master(a.getOrElse("master", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
       .appName("graft-migrate")
@@ -49,72 +96,9 @@ object MigrateMain {
       .withExtensions(new GraftExtensions)
       .getOrCreate()
 
-    try {
-      val renames = a.get("rename").map(_.split(',').map { kv =>
-        val Array(f, t) = kv.split('='); f -> t
-      }.toMap).getOrElse(Map.empty)
-
-      val cassandra = a.get("cassandra-keyspace").map { ks =>
-        CassandraSource(ks, req("cassandra-table"),
-          Map("spark.cassandra.connection.host" ->
-            a.getOrElse("cassandra-host", "127.0.0.1")))
-      }
-      // schema for sink bootstrap comes from whichever source is bound
-      def srcDf = cassandra.map(_.read(spark))
-        .getOrElse(spark.read.parquet(req("src")))
-
-      val jdbc = a.get("jdbc-url").map { url =>
-        val cfg = JdbcSink.JdbcConfig(
-          url = url,
-          user = a.getOrElse("jdbc-user", ""),
-          password = a.getOrElse("jdbc-password", ""),
-          table = req("jdbc-table"),
-          columns = a.get("jdbc-columns").map(_.split(',').toSeq).getOrElse(Seq.empty),
-          keyCols = req("jdbc-key-cols").split(',').toSeq,
-          dialect = if (url.startsWith("jdbc:derby")) DerbyDialect else MySqlDialect,
-          walTable = a.get("jdbc-wal"))
-        cfg
-      }
-
-      val cfg = MigrateConfig(
-        srcPath = if (cassandra.isDefined) a.getOrElse("src", "") else req("src"),
-        keyCol = req("key"),
-        numRanges = a.getOrElse("ranges", "64").toInt,
-        sinkPath = a.getOrElse("sink", ""),
-        checkpointPath = a.getOrElse("checkpoints", ""),
-        renames = renames,
-        tokenFn = if (cassandra.isDefined) CassandraToken.cassandra_token
-                  else Tokens.tokenOracle,
-        ringMin = if (cassandra.isDefined) Tokens.RingMin else Tokens.OracleRingMin,
-        ringMax = if (cassandra.isDefined) Tokens.RingMax else Tokens.OracleRingMax,
-        source = cassandra,
-        sink = jdbc.map { j =>
-          // bootstrap (K5) before binding the sink
-          val src = srcDf
-          val renamedSchema = org.apache.spark.sql.types.StructType(
-            src.schema.fields.map(f =>
-              f.copy(name = renames.getOrElse(f.name, f.name))) :+
-              org.apache.spark.sql.types.StructField("range_id",
-                org.apache.spark.sql.types.LongType))
-          val columns =
-            if (j.columns.nonEmpty) j.columns else renamedSchema.fields.map(_.name).toSeq
-          val conn = java.sql.DriverManager.getConnection(j.url, j.user, j.password)
-          try Ddl.ensureTables(conn, j.dialect, j.table,
-            org.apache.spark.sql.types.StructType(
-              renamedSchema.fields.filter(f => columns.contains(f.name))),
-            j.keyCols)
-          finally conn.close()
-          JdbcTableSink(j.copy(columns = columns))
-        },
-        checkpoints = jdbc.map(j =>
-          new JdbcCheckpoints(j.url, j.user, j.password, dialect = j.dialect)))
-
-      val m = new Migrate(spark, cfg)
-      m.run(a.getOrElse("passes", "3").toInt)
-      val v = m.validate()
-      // one parseable result line, like the reference's final log
-      println(s"""{"table":"${v.table_name}","src":${v.src_count},"dst":${v.dst_count},"diff":${v.diff},"status":"${v.status}"}""")
-      if (v.status != "OK") sys.exit(2)
-    } finally spark.stop()
+    val v = try run(spark, args) finally spark.stop()
+    // one parseable result line, like the reference's final log
+    println(s"""{"table":"${v.table_name}","src":${v.src_count},"dst":${v.dst_count},"diff":${v.diff},"status":"${v.status}"}""")
+    if (v.status != "OK") sys.exit(2)
   }
 }

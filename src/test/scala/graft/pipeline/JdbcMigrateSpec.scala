@@ -3,7 +3,6 @@ package graft.pipeline
 import java.sql.DriverManager
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 
@@ -21,38 +20,10 @@ class JdbcMigrateSpec extends AnyFunSuite {
   System.setProperty("derby.stream.error.file", "/tmp/derby.log")
   Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
 
-  private val sinkSchema = StructType(Seq(
-    StructField("file_id", LongType),
-    StructField("o_custkey", LongType),
-    StructField("o_totalprice", DoubleType),
-    StructField("range_id", LongType)))
-
   private def freshBinding(): (String, MigrateConfig) = {
     val url = s"jdbc:derby:memory:mig_${java.util.UUID.randomUUID().toString.take(8)};create=true"
-    val conn = DriverManager.getConnection(url)
-    try Ddl.ensureTables(conn, DerbyDialect, "orders_sink", sinkSchema, Seq("file_id"))
-    finally conn.close()
-    val jdbcCfg = JdbcSink.JdbcConfig(
-      url = url, user = "", password = "",
-      table = "orders_sink",
-      columns = Seq("file_id", "o_custkey", "o_totalprice", "range_id"),
-      keyCols = Seq("file_id"),
-      dialect = DerbyDialect, batchSize = 200,
-      walTable = Some("migration_wal"), retryBaseDelayMs = 1)
-    val cfg = MigrateConfig(
-      srcPath = s"${SparkTestBase.Sf0001}/orders.parquet",
-      keyCol = "o_orderkey",
-      numRanges = 4,
-      sinkPath = "", checkpointPath = "",
-      renames = Map("o_orderkey" -> "file_id"),
-      source = Some(new MigrateSource {
-        def read(s: org.apache.spark.sql.SparkSession) =
-          s.read.parquet(s"${SparkTestBase.Sf0001}/orders.parquet")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-      }),
-      sink = Some(JdbcTableSink(jdbcCfg)),
-      checkpoints = Some(new JdbcCheckpoints(url, "", "", dialect = DerbyDialect)))
-    (url, cfg)
+    (url, JdbcTarget(url, "", "", "orders_sink", Seq("file_id"))
+      .bind(spark, JdbcMigrateSpec.ordersConfig))
   }
 
   private def queryLong(url: String, sql: String): Long = {
@@ -120,8 +91,8 @@ class JdbcMigrateSpec extends AnyFunSuite {
     // simulate a seeding crash: only 2 of 4 ranges made it into the table
     // before the process died (the old count>0 guard would never reseed
     // the missing two, silently skipping their data forever)
-    val store = new JdbcCheckpoints(url, "", "", dialect = DerbyDialect)
-    val ranges = graft.core.Tokens.split(4)
+    val store = cfg.checkpoints.get
+    val ranges = graft.core.Tokens.split(4, cfg.ringMin, cfg.ringMax)
     val conn = DriverManager.getConnection(url)
     try {
       val ps = conn.prepareStatement(
@@ -164,6 +135,17 @@ class JdbcMigrateSpec extends AnyFunSuite {
     assert(sink.countsByRange(spark, Seq(0L, 2L)).keySet == Set(0L, 2L))
   }
 
+  test("a checkpoint table seeded by another split fails before any write") {
+    val (url, cfg) = freshBinding()
+    val store = cfg.checkpoints.get
+    store.seedIfEmpty(graft.core.Tokens.split(8, cfg.ringMin, cfg.ringMax))
+    store.markComplete(Seq(0L, 1L, 2L, 3L))
+    val e = intercept[IllegalStateException] { new Migrate(spark, cfg).run() }
+    assert(e.getMessage.contains("Ddl.truncateControlTables"))
+    assert(queryLong(url, "SELECT COUNT(*) FROM \"orders_sink\"") == 0L)
+    assert(queryLong(url, IncompleteSql) == 4L)
+  }
+
   test("a single-pass run() seeds once: seed, fetch, mark, re-fetch") {
     val (_, cfg) = freshBinding()
     val inner = cfg.checkpoints.get
@@ -183,4 +165,20 @@ class JdbcMigrateSpec extends AnyFunSuite {
     new Migrate(spark, cfg.copy(checkpoints = Some(counted))).run()
     assert(calls == Seq("seed", "fetch", "mark", "fetch"))
   }
+}
+
+object JdbcMigrateSpec {
+
+  /** Three order columns, `o_orderkey` renamed to `file_id`, over 4 ranges. */
+  def ordersConfig: MigrateConfig = MigrateConfig(
+    srcPath = s"${SparkTestBase.Sf0001}/orders.parquet",
+    keyCol = "o_orderkey",
+    numRanges = 4,
+    sinkPath = "", checkpointPath = "",
+    renames = Map("o_orderkey" -> "file_id"),
+    source = Some(new MigrateSource {
+      def read(s: org.apache.spark.sql.SparkSession) =
+        s.read.parquet(s"${SparkTestBase.Sf0001}/orders.parquet")
+          .select("o_orderkey", "o_custkey", "o_totalprice")
+    }))
 }

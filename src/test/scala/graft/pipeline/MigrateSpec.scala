@@ -53,6 +53,17 @@ class MigrateSpec extends AnyFunSuite {
     assert(m2.validate().status == "OK")
   }
 
+  test("a checkpoint table seeded by another split fails before any write") {
+    val cfg = freshCfg()
+    val cps = new Checkpoints(spark, cfg.checkpointPath)
+    cps.seedIfEmpty(graft.core.Tokens.split(16, cfg.ringMin, cfg.ringMax))
+    cps.markComplete(0L until 8L)
+    val e = intercept[IllegalStateException] { new Migrate(spark, cfg).run() }
+    assert(e.getMessage.contains("Ddl.truncateControlTables"))
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.sinkPath)))
+    assert(cps.fetchIncomplete().map(_.range_id) == (8L until 16L))
+  }
+
   test("re-running a completed migration is idempotent (effectively-once)") {
     val cfg = freshCfg()
     val m = new Migrate(spark, cfg)

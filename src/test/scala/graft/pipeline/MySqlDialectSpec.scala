@@ -149,34 +149,8 @@ class MySqlDialectSpec extends AnyFunSuite {
     val url = freshUrl()
     MySqlEmu.reset(Map(
       "orders_sink" -> Seq("file_id"), "migration_checkpoint" -> Seq("range_id")))
-    val schema = StructType(Seq(
-      StructField("file_id", LongType),
-      StructField("o_custkey", LongType),
-      StructField("o_totalprice", DoubleType),
-      StructField("range_id", LongType)))
-    val conn = DriverManager.getConnection(url)
-    try Ddl.ensureTables(conn, MySqlDialect, "orders_sink", schema, Seq("file_id"))
-    finally conn.close()
-    val jdbcCfg = JdbcSink.JdbcConfig(
-      url = url, user = "", password = "",
-      table = "orders_sink",
-      columns = Seq("file_id", "o_custkey", "o_totalprice", "range_id"),
-      keyCols = Seq("file_id"),
-      dialect = MySqlDialect, batchSize = 200,
-      walTable = Some("migration_wal"), retryBaseDelayMs = 1)
-    val mcfg = MigrateConfig(
-      srcPath = s"${SparkTestBase.Sf0001}/orders.parquet",
-      keyCol = "o_orderkey",
-      numRanges = 4,
-      sinkPath = "", checkpointPath = "",
-      renames = Map("o_orderkey" -> "file_id"),
-      source = Some(new MigrateSource {
-        def read(s: org.apache.spark.sql.SparkSession) =
-          s.read.parquet(s"${SparkTestBase.Sf0001}/orders.parquet")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-      }),
-      sink = Some(JdbcTableSink(jdbcCfg)),
-      checkpoints = Some(new JdbcCheckpoints(url, "", "", dialect = MySqlDialect)))
+    val mcfg = JdbcTarget(url, "", "", "orders_sink", Seq("file_id"))
+      .bind(spark, JdbcMigrateSpec.ordersConfig)
     val m = new Migrate(spark, mcfg)
     m.run()
     assert(!m.checkpointsIncomplete())

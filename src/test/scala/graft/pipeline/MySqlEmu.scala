@@ -18,7 +18,7 @@ import java.util.concurrent.CopyOnWriteArrayList
   *
   *  1. lexical: backtick quoting is dropped (Derby folds unquoted
   *     identifiers to upper case consistently), NOW() becomes
-  *     CURRENT_TIMESTAMP, TIMESTAMP(6) precision is dropped;
+  *     CURRENT_TIMESTAMP, TIMESTAMP(6) and DATETIME(6) become TIMESTAMP;
   *  2. `INSERT IGNORE` — duplicate-key rows are skipped, emulated with a
   *     key-existence probe inside the SAME transaction (the statement's
   *     documented semantics);
@@ -49,7 +49,7 @@ object MySqlEmu {
   def translate(sql: String): String =
     sql.replace("`", "")
       .replaceAll("(?i)NOW\\(\\)", "CURRENT_TIMESTAMP")
-      .replaceAll("(?i)TIMESTAMP\\(6\\)", "TIMESTAMP")
+      .replaceAll("(?i)(TIMESTAMP|DATETIME)\\(6\\)", "TIMESTAMP")
 
   /** Idempotent driver registration. */
   lazy val register: Unit = DriverManager.registerDriver(new EmuDriver)

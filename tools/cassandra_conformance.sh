@@ -81,19 +81,21 @@ run_migrate() {
     --key o_orderkey --ranges 16 \
     --rename o_orderkey=file_id \
     --jdbc-url $URL --jdbc-user user --jdbc-password password \
-    --jdbc-table orders_sink --jdbc-key-cols file_id --jdbc-wal migration_wal"
+    --jdbc-table orders_sink --jdbc-key-cols file_id"
 }
 
 echo "== run 1: bootstrap + full migration =="
 run_migrate
 
 DST_COUNT=$($MYSQL "SELECT COUNT(*) FROM orders_sink")
-INCOMPLETE=$($MYSQL "SELECT COUNT(*) FROM migration_checkpoint WHERE status <> 'COMPLETE'")
+INCOMPLETE=$($MYSQL "SELECT COUNT(*) FROM migration_checkpoint WHERE checkpoint <> range_end")
 ORPHANS=$($MYSQL "SELECT COUNT(*) FROM migration_wal WHERE status = 'STARTED'")
 
 [ "$SRC_COUNT" = "$DST_COUNT" ] || { echo "FAIL: count parity $SRC_COUNT != $DST_COUNT"; exit 1; }
 [ "$INCOMPLETE" = "0" ] || { echo "FAIL: $INCOMPLETE ranges not COMPLETE"; exit 1; }
 [ "$ORPHANS" = "0" ] || { echo "FAIL: $ORPHANS orphaned STARTED WAL rows"; exit 1; }
+VALIDATION=$($MYSQL "SELECT CONCAT(diff, ' ', status) FROM migration_validation WHERE table_name = 'orders_sink'")
+[ "$VALIDATION" = "0 OK" ] || { echo "FAIL: validation row '$VALIDATION', expected '0 OK'"; exit 1; }
 
 echo "== run 2: idempotency (INSERT IGNORE must change nothing) =="
 run_migrate

@@ -8,7 +8,8 @@
 #   1. row-count parity source vs sink (global validation, T6)
 #   2. every checkpoint range COMPLETE with matching counts (K3/T5)
 #   3. no orphaned STARTED WAL entries (K2)
-#   4. a SECOND full run changes nothing (INSERT IGNORE idempotency, K1)
+#   4. one validation row for orders_sink with diff 0 and status OK (K4)
+#   5. a SECOND full run changes nothing (INSERT IGNORE idempotency, K1)
 #
 # In-sandbox, the same statement text is executed against Derby through
 # the MySqlEmu protocol bridge (MySqlDialectSpec) — this script is the
@@ -44,7 +45,7 @@ run_migrate() {
     --src $SF_DIR/orders.parquet --key o_orderkey --ranges 16 \
     --rename o_orderkey=file_id \
     --jdbc-url $URL --jdbc-user user --jdbc-password password \
-    --jdbc-table orders_sink --jdbc-key-cols file_id --jdbc-wal migration_wal"
+    --jdbc-table orders_sink --jdbc-key-cols file_id"
 }
 
 echo "== run 1: bootstrap + full migration =="
@@ -56,12 +57,14 @@ print(duckdb.sql(f"SELECT count(*) FROM '{sys.argv[1]}/orders.parquet'").fetchon
 EOF
 )
 DST_COUNT=$($MYSQL "SELECT COUNT(*) FROM orders_sink")
-INCOMPLETE=$($MYSQL "SELECT COUNT(*) FROM migration_checkpoint WHERE status <> 'COMPLETE'")
+INCOMPLETE=$($MYSQL "SELECT COUNT(*) FROM migration_checkpoint WHERE checkpoint <> range_end")
 ORPHANS=$($MYSQL "SELECT COUNT(*) FROM migration_wal WHERE status = 'STARTED'")
 
 [ "$SRC_COUNT" = "$DST_COUNT" ] || { echo "FAIL: count parity $SRC_COUNT != $DST_COUNT"; exit 1; }
 [ "$INCOMPLETE" = "0" ] || { echo "FAIL: $INCOMPLETE ranges not COMPLETE"; exit 1; }
 [ "$ORPHANS" = "0" ] || { echo "FAIL: $ORPHANS orphaned STARTED WAL rows"; exit 1; }
+VALIDATION=$($MYSQL "SELECT CONCAT(diff, ' ', status) FROM migration_validation WHERE table_name = 'orders_sink'")
+[ "$VALIDATION" = "0 OK" ] || { echo "FAIL: validation row '$VALIDATION', expected '0 OK'"; exit 1; }
 
 echo "== run 2: idempotency (INSERT IGNORE must change nothing) =="
 run_migrate
